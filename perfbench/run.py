@@ -11,8 +11,9 @@ workload with no think time at ``local[<cpus>]``:
   into the noop sink, in a seed-shuffled order.
 
 Every output is checked outside the timed region: pipeline sinks for row
-and token conservation and per-route counts, query results against their
-``oracle_sql()`` DuckDB twins. The last stdout line is one JSON object
+and token conservation and per-route counts; each query execution's row
+count, and in a final untimed pass each query's collected result,
+against its ``oracle_sql()`` DuckDB twin. The last stdout line is one JSON object
 with ``correct``, ``attempted``, ``failed`` and ``metrics``: the
 end-to-end metrics with ``--trace 0``, the per-layer metrics with
 ``--trace 1``. See README.md in this directory for what each metric means.
@@ -30,7 +31,6 @@ import statistics
 import sys
 import time
 import traceback
-from collections import Counter
 from pathlib import Path
 
 from spans import StatusStore, Tracer
@@ -255,7 +255,7 @@ def run_pipeline_workload(spark, ctx: dict) -> list[dict]:
     work = WORK / "work" / str(os.getpid())
     store = ctx.get("store")
 
-    def iteration(i: int, tracer, warmup: bool) -> dict:
+    def iteration(i: int, tracer) -> dict:
         cfg = PipelineConfig(sequences_path=str(seq_dir), lookup_path=str(lookup), out_dir=str(work / f"out-{i}"))
         rec: dict = {"attempted": 1}
         if tracer.enabled:
@@ -323,44 +323,24 @@ def run_pipeline_workload(spark, ctx: dict) -> list[dict]:
 
 # ------------------------------------------------------------ query workloads
 
-def normalized(values, norm_value) -> list[str]:
-    """norm_value of every cell of one column; whole int, float and bool
-    columns and str cells take fast paths that give the same strings."""
-    kind = values.dtype.kind
-    if kind in "iu":
-        return [str(v) for v in values.tolist()]
-    if kind == "f":
-        return ["null" if v != v else repr(round(v, 9)) for v in values.tolist()]
-    if kind == "b":
-        return ["true" if v else "false" for v in values.tolist()]
-    return [v if type(v) is str else norm_value(v) for v in values]
-
-
-def multiset(pdf) -> Counter:
-    """rows_to_multiset of tools/check_oracle.py over a pandas frame."""
-    from tools.check_oracle import norm_value
-
-    cols = list(pdf.columns)
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return Counter(zip(*(normalized(pdf.iloc[:, i].to_numpy(), norm_value) for i in order)))
-
-
 def frames_differ(spark_pdf, oracle_pdf) -> str | None:
     """The comparison of tools/check_oracle.py: row count, column names,
-    then the order-insensitive multiset of normalized rows."""
+    then its order-insensitive multiset of normalized rows."""
+    from tools.check_oracle import rows_to_multiset
+
     if len(spark_pdf) != len(oracle_pdf):
         return f"rowcount spark={len(spark_pdf)} oracle={len(oracle_pdf)}"
     if sorted(spark_pdf.columns) != sorted(oracle_pdf.columns):
         return f"schema spark={sorted(spark_pdf.columns)} oracle={sorted(oracle_pdf.columns)}"
-    ms, mo = multiset(spark_pdf), multiset(oracle_pdf)
+    ms, mo = (rows_to_multiset(list(p.columns), p.itertuples(index=False, name=None))
+              for p in (spark_pdf, oracle_pdf))
     if ms != mo:
         return f"values spark-only={list((ms - mo).items())[:2]} oracle-only={list((mo - ms).items())[:2]}"
     return None
 
 
-def check_queries(outputs: dict, names: list[str], sf_dir: Path) -> dict[str, str | None]:
-    """Problem (or None) per query, comparing its collected output with
-    the DuckDB twin from ``oracle_sql()``."""
+def oracle_frames(names: list[str], sf_dir: Path) -> dict:
+    """The result of each query's ``oracle_sql()`` DuckDB twin."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -370,14 +350,13 @@ def check_queries(outputs: dict, names: list[str], sf_dir: Path) -> dict[str, st
     con.execute(f"SET threads = {cpu_count()}")
     for p in sf_dir.glob("*.parquet"):
         con.execute(f"CREATE VIEW {p.stem} AS SELECT * FROM read_parquet('{p}')")
-    return {
-        name: frames_differ(outputs[name], con.execute(oracles[name]).df())
-        if name in outputs else "raised during the warm-up pass"
-        for name in names
-    }
+    return {name: con.execute(oracles[name]).df() for name in names}
 
 
 def run_query_workload(spark, ctx: dict, names: list[str]) -> list[dict]:
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     import __spark_entry__ as entry
 
     from tables import write_tables
@@ -386,17 +365,19 @@ def run_query_workload(spark, ctx: dict, names: list[str]) -> list[dict]:
     sf_dir, ctx["gen.s"] = cached_inputs(
         "tables", sf, ctx["seed"], lambda d: write_tables(d, sf, ctx["seed"])
     )
+    t0 = time.perf_counter()
+    expected = oracle_frames(names, sf_dir)
+    ctx["wall"]["oracle"] = time.perf_counter() - t0
     queries = entry.queries()
     order_rng = random.Random(ctx["seed"])
     store = ctx.get("store")
-    # the warm-up pass collects every result for the oracle check; the
-    # timed passes run the same plans on the same data into noop
-    outputs: dict = {}
 
-    def one_pass(i: int, tracer, warmup: bool) -> dict:
+    def one_pass(i: int, tracer) -> dict:
+        """Every query into noop; each execution's row count, observed
+        in the same job, is checked against its oracle's."""
         order = list(names)
         order_rng.shuffle(order)
-        rec: dict = {"steps": {}, "errors": [], "attempted": len(order)}
+        rec: dict = {"steps": {}, "problems": [], "attempted": len(order)}
         if tracer.enabled:
             store.counts_since_mark()
         for name in order:
@@ -404,17 +385,21 @@ def run_query_workload(spark, ctx: dict, names: list[str]) -> list[dict]:
                 with tracer.span(f"{name}.build") as b:
                     t0 = time.perf_counter()
                     df = queries[name](spark, str(sf_dir))
+                    built = time.perf_counter() - t0
+                observed = Observation()
+                df = df.observe(observed, F.count(F.lit(1)).alias("rows"))
                 with tracer.span(f"{name}.exec") as s:
-                    if warmup:
-                        outputs[name] = df.toPandas()
-                    else:
-                        noop(df)
-                    t1 = time.perf_counter()
-            except Exception:  # counted in `failed`, the loop goes on
+                    t0 = time.perf_counter()
+                    noop(df)
+                    ran = time.perf_counter() - t0
+                rows = observed.get["rows"]
+            except Exception as e:  # counted in `failed`, the loop goes on
                 traceback.print_exc()
-                rec["errors"].append(name)
+                rec["problems"].append(f"{name} raised {type(e).__name__}")
                 continue
-            rec["steps"][name] = t1 - t0
+            rec["steps"][name] = built + ran
+            if rows != len(expected[name]):
+                rec["problems"].append(f"{name}: {rows} rows, oracle {len(expected[name])}")
             if tracer.enabled:
                 counts = store.counts_since_mark()
                 s.counts = dict(counts)
@@ -424,24 +409,39 @@ def run_query_workload(spark, ctx: dict, names: list[str]) -> list[dict]:
                 for k, v in counts.items():
                     rec[k] = rec.get(k, 0) + v
                 rec["task.skew"] = skew
-        if not rec["errors"]:
+        if len(rec["steps"]) == len(order):
             rec["op_s"] = sum(rec["steps"].values())
         if tracer.enabled:
             rec["build.s"] = sum(rec[f"{n}.build_s"] for n in rec["steps"])
             rec["exec.s"] = sum(rec[f"{n}.exec_s"] for n in rec["steps"])
+        rec["failed"] = len(rec["problems"])
+        spark.catalog.clearCache()
+        return rec
+
+    def verification_pass() -> dict:
+        """After the timed loop: every query collected and compared with
+        its oracle row by row."""
+        rec: dict = {"problems": [], "attempted": len(names)}
+        for name in names:
+            try:
+                got = queries[name](spark, str(sf_dir)).toPandas()
+            except Exception as e:  # counted in `failed`
+                traceback.print_exc()
+                rec["problems"].append(f"{name} raised {type(e).__name__} in the verification pass")
+                continue
+            ctx["rows_out"][name] = len(got)
+            problem = frames_differ(got, expected[name])
+            if problem:
+                rec["problems"].append(f"{name}: {problem}")
+        rec["failed"] = len(rec["problems"])
         spark.catalog.clearCache()
         return rec
 
     records = closed_loop(ctx, one_pass, warmup=1)
     t0 = time.perf_counter()
-    problems = check_queries(outputs, names, sf_dir)
-    ctx["wall"]["checks"] = time.perf_counter() - t0
-    # a failed check fails every execution of that query's plan
-    for r in records:
-        r["problems"] = [f"{n} raised" for n in r["errors"]]
-        r["problems"] += [f"{n}: {problems[n]}" for n in r["steps"] if problems[n]]
-        r["failed"] = len(r["problems"])
-    ctx["rows_out"] = {n: len(outputs[n]) if n in outputs else 0 for n in names}
+    ctx["rows_out"] = {n: 0 for n in names}
+    records.append(verification_pass())
+    ctx["wall"]["verify"] = time.perf_counter() - t0
     return records
 
 
@@ -456,9 +456,7 @@ def closed_loop(ctx: dict, operation, warmup: int) -> list[dict]:
     t0 = time.perf_counter()
     records = []
     for i in range(warmup):
-        rec = operation(i, off, True)
-        rec["warmup"] = True
-        records.append(rec)
+        records.append(operation(i, off))
     steal0 = cpu_steal_ticks()
     ctx["wall"]["warmup"] = time.perf_counter() - t0
     t0 = time.perf_counter()
@@ -467,9 +465,10 @@ def closed_loop(ctx: dict, operation, warmup: int) -> list[dict]:
         traced = ctx["trace"] and n % 2 == 1
         tracer = ctx["tracer"] if traced else off
         with tracer.span("operation"):
-            rec = operation(len(records), tracer, False)
+            rec = operation(len(records), tracer)
         n += 1
         rec["traced"] = traced
+        rec["timed"] = True
         records.append(rec)
         if time.perf_counter() - t0 >= ctx["seconds"] and n >= (2 if ctx["trace"] else 1):
             break
@@ -599,7 +598,7 @@ def run(args) -> dict:
 
     ctx["wall"]["total"] = time.perf_counter() - t0
     print("wall: " + " ".join(f"{k}={v:.1f}s" for k, v in ctx["wall"].items()))
-    timed = [r for r in records if not r.get("warmup")]
+    timed = [r for r in records if r.get("timed")]
     attempted = sum(r["attempted"] for r in records)
     failed = sum(r["failed"] for r in records)
     for r in records:

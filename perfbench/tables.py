@@ -12,8 +12,9 @@ a vector table), so that every ``queries()`` entry and its
 * event timestamps are sorted uniform over 30 days, user ids cover
   15k x sf users, orders point at any customer;
 * documents are 10-100 words from a 30-word vocabulary, and 5% of them
-  are an earlier document plus the word ``dup``. Every near-duplicate
-  pair therefore has Jaccard >= 8/9 on 3-word shingles, the profile at
+  are an earlier original (never another copy) plus the word ``dup``.
+  Every near-duplicate pair therefore has Jaccard >= 8/9 on 3-word
+  shingles, the profile at
   which ``minhash_lsh``'s banding recall is 1 - 1e-7 and its exact
   oracle stays valid;
 * embeddings are uniform random 64-d unit vectors (float32).
@@ -102,10 +103,12 @@ def gen_orders(rng: np.random.Generator, n: int, n_customers: int) -> pa.Table:
 def gen_documents(rng: np.random.Generator, n: int) -> pa.Table:
     vocab = np.asarray(WORDS)
     texts: list[str] = []
+    originals: list[int] = []
     for i in range(n):
-        if i > 0 and rng.random() < DUP_FRAC:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
+        if originals and rng.random() < DUP_FRAC:
+            texts.append(texts[originals[int(rng.integers(0, len(originals)))]] + " dup")
         else:
+            originals.append(i)
             texts.append(" ".join(vocab[rng.integers(0, len(vocab), size=int(rng.integers(10, 101)))]))
     return pa.table(
         {

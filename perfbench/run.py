@@ -8,7 +8,8 @@ workload with no think time at ``local[<cpus>]``:
 * ``pipeline_fanout`` calls ``run_pipeline`` on a generated sequence
   table (parse, broadcast enrich, fan-out parquet write, publish);
 * ``query_mix`` runs passes over a fixed set of ``queries()`` entries
-  into the noop sink, in a seed-shuffled order.
+  into the noop sink, in a seed-shuffled order; the last pass stops at
+  the end of the measured window.
 
 Every output is checked outside the timed region: pipeline sinks for row
 and token conservation and per-route counts; each query execution's row
@@ -123,10 +124,10 @@ def start_session(cores: int):
     return spark, t1 - t0, time.perf_counter() - t1
 
 
-def set_up(cores: int, stats: dict):
-    """The first start launches the JVM; setup_s is the median of the
-    in-process restarts that follow it."""
-    spark, stats["session.start_s"], stats["session.warmup_s"] = start_session(cores)
+def time_restarts(spark, cores: int, stats: dict):
+    """setup_s: the median of in-process session restarts, taken after
+    the workload, once the JVM's start-up compilation no longer competes
+    with them."""
     samples = []
     for _ in range(SETUP_SAMPLES):
         spark.stop()
@@ -134,7 +135,6 @@ def set_up(cores: int, stats: dict):
         spark = start_session(cores)[0]
         samples.append(time.perf_counter() - t0)
     stats["setup_s"] = statistics.median(samples)
-    return spark
 
 
 def shut_down() -> None:
@@ -255,7 +255,7 @@ def run_pipeline_workload(spark, ctx: dict) -> list[dict]:
     work = WORK / "work" / str(os.getpid())
     store = ctx.get("store")
 
-    def iteration(i: int, tracer) -> dict:
+    def iteration(i: int, tracer, deadline) -> dict:
         cfg = PipelineConfig(sequences_path=str(seq_dir), lookup_path=str(lookup), out_dir=str(work / f"out-{i}"))
         rec: dict = {"attempted": 1}
         if tracer.enabled:
@@ -302,7 +302,7 @@ def run_pipeline_workload(spark, ctx: dict) -> list[dict]:
             "parse.s": parse.seconds, "enrich.prepare_s": prepare.seconds,
         }
 
-    records = closed_loop(ctx, iteration, warmup=3)
+    records = closed_loop(ctx, iteration, warmup=4)
     for r in records:
         if "op_s" not in r:
             continue
@@ -372,15 +372,19 @@ def run_query_workload(spark, ctx: dict, names: list[str]) -> list[dict]:
     order_rng = random.Random(ctx["seed"])
     store = ctx.get("store")
 
-    def one_pass(i: int, tracer) -> dict:
-        """Every query into noop; each execution's row count, observed
-        in the same job, is checked against its oracle's."""
+    def one_pass(i: int, tracer, deadline) -> dict:
+        """Every query into noop, or those that start before ``deadline``;
+        each execution's row count, observed in the same job, is checked
+        against its oracle's."""
         order = list(names)
         order_rng.shuffle(order)
-        rec: dict = {"steps": {}, "problems": [], "attempted": len(order)}
+        rec: dict = {"steps": {}, "problems": [], "attempted": 0}
         if tracer.enabled:
             store.counts_since_mark()
         for name in order:
+            if deadline is not None and time.perf_counter() >= deadline:
+                break
+            rec["attempted"] += 1
             try:
                 with tracer.span(f"{name}.build") as b:
                     t0 = time.perf_counter()
@@ -449,28 +453,32 @@ def run_query_workload(spark, ctx: dict, names: list[str]) -> list[dict]:
 
 def closed_loop(ctx: dict, operation, warmup: int) -> list[dict]:
     """Warm-up operations, then operations back to back until
-    ``seconds`` have passed (at least two when traced). A traced run
-    alternates untraced and traced operations so the tracing overhead is
-    measured in the same window."""
+    ``seconds`` have passed (at least two when traced). Each operation
+    after those first ones gets the end of the window as its deadline,
+    so a query pass stops there instead of running past it. A traced
+    run alternates untraced and traced operations so the tracing
+    overhead is measured in the same window."""
     off = Tracer("", enabled=False)
     t0 = time.perf_counter()
     records = []
     for i in range(warmup):
-        records.append(operation(i, off))
+        records.append(operation(i, off, None))
     steal0 = cpu_steal_ticks()
     ctx["wall"]["warmup"] = time.perf_counter() - t0
     t0 = time.perf_counter()
+    deadline = t0 + ctx["seconds"]
+    first = 2 if ctx["trace"] else 1
     n = 0
     while True:
         traced = ctx["trace"] and n % 2 == 1
         tracer = ctx["tracer"] if traced else off
         with tracer.span("operation"):
-            rec = operation(len(records), tracer)
+            rec = operation(len(records), tracer, deadline if n >= first else None)
         n += 1
         rec["traced"] = traced
         rec["timed"] = True
         records.append(rec)
-        if time.perf_counter() - t0 >= ctx["seconds"] and n >= (2 if ctx["trace"] else 1):
+        if time.perf_counter() >= deadline and n >= first:
             break
     ctx["wall"]["timed"] = time.perf_counter() - t0
     steal1 = cpu_steal_ticks()
@@ -523,8 +531,9 @@ def end_to_end(ctx: dict, timed: list[dict]) -> dict:
         for r in timed:
             for name, s in r["steps"].items():
                 steps.setdefault(name, []).append(s)
-    geomean = math.exp(statistics.fmean(math.log(statistics.median(v)) for v in steps.values()))
-    print(describe("pass_s", ops) + " ops: " + " ".join(f"{v:.3f}" for v in ops))
+    medians = [statistics.median(v) for v in steps.values()]
+    geomean = math.exp(statistics.fmean(math.log(m) for m in medians))
+    print(describe("whole operations", ops) + " ops: " + " ".join(f"{v:.3f}" for v in ops))
     for name, v in sorted(steps.items()):
         print("  " + describe(f"step {name}", v))
     print(describe("single step (all)", [s for v in steps.values() for s in v]))
@@ -534,14 +543,15 @@ def end_to_end(ctx: dict, timed: list[dict]) -> dict:
         print(f"sink_bytes_per_input_byte: {median_of(timed, 'sink.bytes_per_input_byte'):.4f}")
     return {
         "setup_s": (ctx["setup_s"], "s"),
-        "pass_s": (statistics.median(ops), "s"),
+        "pass_s": (sum(medians), "s"),
         "step_s_geomean": (geomean, "s"),
     }
 
 
 def per_layer(ctx: dict, timed: list[dict]) -> dict:
-    traced = [r for r in timed if r["traced"]]
-    plain = [r for r in timed if not r["traced"]]
+    whole = [r for r in timed if "op_s" in r]
+    traced = [r for r in whole if r["traced"]]
+    plain = [r for r in whole if not r["traced"]]
     values = {k: median_of(traced, k) for k, _ in PER_LAYER + LAYER_TABLE_ONLY}
     for k in ("session.start_s", "session.warmup_s", "session.peak_rss_mb", "gen.s"):
         values[k] = ctx[k]
@@ -579,7 +589,8 @@ def run(args) -> dict:
     }
     t0 = time.perf_counter()
     try:
-        spark = set_up(cores, ctx)
+        # the first start launches the JVM
+        spark, ctx["session.start_s"], ctx["session.warmup_s"] = start_session(cores)
         ctx["wall"]["setup"] = time.perf_counter() - t0
         env = environment_record(spark, cores)
         print("env " + json.dumps(env, sort_keys=True))
@@ -592,6 +603,9 @@ def run(args) -> dict:
         from pyspark import SparkContext
 
         ctx["session.peak_rss_mb"] = vm_hwm_mb(SparkContext._gateway.proc.pid)
+        t1 = time.perf_counter()
+        time_restarts(spark, cores, ctx)
+        ctx["wall"]["restarts"] = time.perf_counter() - t1
     finally:
         shut_down()
         shutil.rmtree(WORK / "work" / str(os.getpid()), ignore_errors=True)

@@ -24,7 +24,6 @@ from logstash_filter_elasticsearch_spark.operators.aggregate import (
     salted_dedup_first,
 )
 from logstash_filter_elasticsearch_spark.operators.dedup import (
-    _spread,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -32,6 +31,7 @@ from logstash_filter_elasticsearch_spark.operators.dedup import (
     simhash,
 )
 from logstash_filter_elasticsearch_spark.operators.enrich import EnrichSpec, Enricher
+from logstash_filter_elasticsearch_spark.operators.layout import spread
 from logstash_filter_elasticsearch_spark.operators.similarity import cosine_topk, lsh_topk
 from logstash_filter_elasticsearch_spark.operators.text import (
     BPE_ISH,
@@ -89,9 +89,7 @@ def q_fields_multi_hit(spark, sf_dir):
     that parallelizing the single-file probe scan wins (measured
     1.33s -> 1.0s at sf1.0; the lighter top-1 enrich queries measured
     the same spread as a LOSS and stay unspread)."""
-    from logstash_filter_elasticsearch_spark.operators.dedup import _spread_by
-
-    events = _spread_by(_t(spark, sf_dir, "events"), ["event_id"])
+    events = spread(_t(spark, sf_dir, "events"), by=["event_id"], skip_tiny=True)
     orders = _t(spark, sf_dir, "orders")
     spec = EnrichSpec(
         event_key="user_id",
@@ -287,9 +285,7 @@ def q_topk_per_key(spark, sf_dir):
     -> 0.52s at sf1.0; guide §2.2 partition sizing)."""
     from pyspark.sql.window import Window
 
-    from logstash_filter_elasticsearch_spark.operators.dedup import _spread_by
-
-    orders = _spread_by(_t(spark, sf_dir, "orders"), ["o_custkey"])
+    orders = spread(_t(spark, sf_dir, "orders"), by=["o_custkey"], skip_tiny=True)
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -411,7 +407,7 @@ def q_lang_id(spark, sf_dir):
 
 
 def q_token_counts(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return docs.select(
         "doc_id",
         F.size(F.split(F.trim("text"), r"\s+")).alias("ws_tokens"),
@@ -420,7 +416,7 @@ def q_token_counts(spark, sf_dir):
 
 
 def q_fingerprint(spark, sf_dir):
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return docs.select(
         "doc_id", F.md5(normalize_text(F.col("text"))).alias("fingerprint")
     )
@@ -428,7 +424,7 @@ def q_fingerprint(spark, sf_dir):
 
 def q_multimodal_meta(spark, sf_dir):
     """Binary-column plumbing: encode->binary, native byte metadata."""
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     payload = F.encode("text", "utf-8")
     return docs.select(
         "doc_id",
@@ -441,7 +437,7 @@ def q_embedding_topk(spark, sf_dir):
     """Brute-force cosine top-k ANN baseline."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    out = cosine_topk(emb, queries, k=5, dim=64)
+    out = cosine_topk(emb, queries, k=5)
     return out.select(
         "query_id", "neighbor_id", "rank", F.round("cos", 5).alias("cos")
     )

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from logstash_filter_elasticsearch_spark.operators.layout import spread
+
 
 def normalize_text(col: Column) -> Column:
     """lowercase, strip punctuation, collapse whitespace."""
@@ -43,7 +45,7 @@ def exact_dedup(
     is 16 bytes/row regardless of document size.
     """
     content = normalize_text(F.col(text_col)) if normalized else F.col(text_col)
-    # no _spread here: the aggregation shuffles only 16-byte hashes and
+    # no spread here: the aggregation shuffles only 16-byte hashes and
     # the single md5 pass is cheaper than shuffling the raw rows
     # (measured 0.35s vs 0.65s at sf1.0)
     return (
@@ -85,76 +87,6 @@ def with_word_shingles(
     single shingle.
     """
     return df.withColumn(out, word_shingles(F.col(text_col), n))
-
-
-def _spread(df: DataFrame, min_bytes: int = 0) -> DataFrame:
-    """Repartition a too-coarse scan before expensive per-row work.
-
-    Guide §2.5 "input skew": a single-file (single-row-group) parquet
-    table scans as ONE task, so shingle extraction / hashing would run
-    on one core regardless of cluster size. Spreading the cheap raw
-    rows round-robin to the session's shuffle parallelism costs one
-    tiny shuffle of the text column and parallelizes everything
-    downstream. No-op when the input already has enough partitions
-    (e.g. the 64-file bench pipeline dataset), so well-laid-out tables
-    never pay an extra shuffle. Deterministic under retries (Spark
-    sorts before round-robin repartition, SPARK-23207).
-
-    ``min_bytes``: optional plan-stats floor — callers whose per-row
-    work is CHEAP relative to task overhead (the similarity numpy
-    stages: one matmul row per vector) skip spreading tiny inputs.
-    Regex-heavy callers keep the default 0 (always spread): even a
-    0.6 MB corpus measured faster spread than not.
-    """
-    if df.isStreaming:  # partition introspection needs a batch plan
-        return df
-    spark = df.sparkSession
-    try:
-        target = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        nparts = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if nparts * 4 > target or (min_bytes and _tiny_plan(df, min_bytes)):
-        return df
-    return df.repartition(target)
-
-
-def _tiny_plan(df: DataFrame, min_bytes: int = 4 * 1024 * 1024) -> bool:
-    """True when the plan's estimated input is too small for a spread
-    to pay: fanning a sub-4MB scan over the task pool costs more in
-    exchange + per-task (and Python-worker) overhead than the
-    parallelism returns (measured: ann_ivf at sf0.1 0.87s unspread vs
-    1.3s spread, while every sf1.0 table is >10 MB and spreads).
-    Statistics only — no job is triggered."""
-    try:
-        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        # py4j auto-converts java BigInteger to int; str() covers any
-        # BigInt-like object it hands back instead
-        return int(size if isinstance(size, int) else str(size)) < min_bytes
-    except Exception:
-        return False
-
-
-def _spread_by(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Hash-repartition a too-coarse scan by the given key columns.
-
-    Keyed sibling of ``_spread`` for inputs about to be grouped on
-    ``cols``: one exchange both parallelizes the downstream aggregate
-    and already satisfies its clustering requirement, so the groupBy
-    plans no second exchange (guide §2.4 "share one exchange").
-    No-op for well-partitioned inputs and streams.
-    """
-    if df.isStreaming:
-        return df
-    spark = df.sparkSession
-    try:
-        target = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        nparts = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if nparts * 4 > target or _tiny_plan(df):
-        return df
-    return df.repartition(target, *[F.col(c) for c in cols])
 
 
 def _drop_heavy_keys(rows: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
@@ -379,7 +311,7 @@ def ngram_jaccard_pairs(
     rows; per-task memory is O(nnz/B + pairs-per-block-pair).
     """
     base = with_word_shingles(
-        _spread(df.select(F.col(id_col).alias("_id"), text_col)), text_col, n
+        spread(df.select(F.col(id_col).alias("_id"), text_col)), text_col, n
     )
     # Persist the UNEXPLODED (id, shingle-array) rows: Generate inlines
     # a computed generator expression, so exploding straight off the
@@ -464,7 +396,7 @@ def minhash_signatures(
 
     arr = (
         with_word_shingles(
-            _spread(df.select(F.col(id_col).alias("_id"), text_col)),
+            spread(df.select(F.col(id_col).alias("_id"), text_col)),
             text_col,
             shingle_n,
         )
@@ -555,7 +487,7 @@ def minhash_lsh_pairs(
     # runs once per side (released by the ContextCleaner with the
     # result)
     docs = with_word_shingles(
-        _spread(df.select(F.col(id_col).alias("_id"), text_col)), text_col, shingle_n
+        spread(df.select(F.col(id_col).alias("_id"), text_col)), text_col, shingle_n
     ).select("_id", "_sh")
     from pyspark import StorageLevel
 
@@ -597,7 +529,7 @@ def simhash(
     from pyspark import StorageLevel
 
     words_arr = (
-        _spread(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
+        spread(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", F.split(normalize_text(F.col(text_col)), " ").alias("_wl"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logstash_filter_elasticsearch_spark.functions.fieldref import field_ref_to_path
-from logstash_filter_elasticsearch_spark.operators.dedup import _spread, _spread_by
+from logstash_filter_elasticsearch_spark.operators.layout import spread
 
 DEFAULT_FAILURE_TAG = "_elasticsearch_lookup_failure"  # elasticsearch.rb:133-134
 
@@ -258,7 +258,7 @@ class Enricher:
         # raw rows BY THE JOIN KEY parallelizes it with one exchange
         # that the groupBy then reuses (guide §2.4), and is a no-op for
         # well-laid-out multi-file tables
-        lookup = _spread_by(lookup, [spec.lookup_key])
+        lookup = spread(lookup, by=[spec.lookup_key], skip_tiny=True)
         # size-0 search (agg-only, spec elasticsearch_dsl_spec.rb:157-178)
         # or no copy mappings: skip hit collection entirely — the
         # broadcast payload shrinks to key + aggregates.
@@ -285,7 +285,7 @@ class Enricher:
             for i, part in enumerate(field_ref_to_path(s[0]).split(".")):
                 try:
                     node = (lookup.schema if i == 0 else node)[part].dataType
-                except Exception:
+                except (KeyError, TypeError):  # absent field / non-struct
                     node = None
                     break
             if node is not None:

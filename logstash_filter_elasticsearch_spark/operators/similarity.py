@@ -13,10 +13,10 @@ Engineering rules learned by measurement on this engine:
    ``aggregate``/``zip_with`` run interpreted (no codegen) and were
    ~10x slower per pair.
 2. Per-VECTOR dense math (bucket signatures, centroid assignment,
-   block matmuls) lives in Arrow-batched ``mapInPandas`` numpy stages:
+   block matmuls) lives in Arrow-batched ``mapInArrow`` numpy stages:
    a Column formulation of n_tables x n_planes x dim terms compiles
    megabytes of codegen (minutes of stall), and — crucially —
-   ``mapInPandas`` is a hard materialization barrier. Catalyst
+   ``mapInArrow`` is a hard materialization barrier. Catalyst
    collapses Projects into joins, so any expensive projection feeding
    a join would otherwise be RE-EVALUATED per joined row.
 
@@ -37,38 +37,69 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from logstash_filter_elasticsearch_spark.operators.dedup import _spread
+from logstash_filter_elasticsearch_spark.operators.layout import spread
+
+# Upper bound on the rows any operator here collects to the driver (a
+# broadcast query side, or cosine_near_dup_pairs' whole corpus): past
+# it the operator raises instead of materializing the input there.
+MAX_COLLECT_ROWS = 100_000
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product. With ``dim`` known, the sum is UNROLLED into a plain
-    arithmetic expression that whole-stage codegen compiles; the
-    higher-order ``aggregate``/``zip_with`` fallback runs interpreted
-    per element and measured ~10x slower on pair-heavy plans (a 2M-pair
-    near-dup scan went 20.7s -> ~2s after unrolling)."""
-    if dim:
-        return reduce(add, (a[i] * b[i] for i in range(dim)))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def dot(a: Column, b: Column, dim: int) -> Column:
+    """Dot product, UNROLLED into a plain arithmetic expression that
+    whole-stage codegen compiles; a higher-order ``aggregate``/
+    ``zip_with`` formulation runs interpreted per element and measured
+    ~10x slower on pair-heavy plans (a 2M-pair near-dup scan went 20.7s
+    -> ~2s after unrolling)."""
+    return reduce(add, (a[i] * b[i] for i in range(dim)))
+
+
+def _list_to_matrix(v, dim: int) -> np.ndarray:
+    """Arrow list<float|double> array -> (len(v), dim) float64 matrix.
+
+    Zero-copy flatten+reshape for double input, so the result may be a
+    READ-ONLY view of the Arrow buffer: never write into it in place.
+    Raises ValueError on a null vector or on any row whose length is not
+    ``dim``, checked from the list offsets (a ragged batch whose lengths
+    happen to sum to n*dim must not be silently re-sliced).
+    """
+    if v.null_count:
+        raise ValueError(f"{v.null_count} null vector(s); vectors must be non-null")
+    lengths = np.diff(v.offsets.to_numpy())
+    bad = lengths[lengths != dim]
+    if bad.size:
+        raise ValueError(f"vector of length {bad[0]} in a column of dim {dim}")
+    flat = v.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(len(v), dim)
+
+
+def _collect_vectors(df: DataFrame, id_col: str, vec_col: str, max_rows: int):
+    """Driver-side (ids, float64 matrix) of a SMALL frame; ``dim`` is the
+    first vector's length.
+
+    One Arrow collect of at most ``max_rows + 1`` rows: an oversized
+    input raises without ever being materialized on the driver, and
+    without a separate count() job re-scanning the source (toArrow, not
+    the row-based collect: 0.65s vs 2.26s for 20k vectors, guide §6).
+    Vectors are cast to array<double> JVM-side; ids keep their type.
+    """
+    tbl = (
+        df.select(
+            F.col(id_col).alias("i"), F.col(vec_col).cast("array<double>").alias("v")
+        )
+        .limit(max_rows + 1)
+        .toArrow()
     )
-
-
-def norm(a: Column, dim: int | None = None) -> Column:
-    if dim:
-        return F.sqrt(reduce(add, (a[i] * a[i] for i in range(dim))))
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
-def _vec_dim(df: DataFrame, vec_col: str) -> int:
-    """Embedding dimensionality from the first row (plan-time constant)."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    return int(row["d"])
+    if tbl.num_rows > max_rows:
+        raise ValueError(
+            f"more than max_rows={max_rows} vectors to collect on the driver: "
+            f"this side is broadcast by contract; use an approximate tier "
+            f"(lsh_topk / lsh_near_dup_pairs) at scale, or raise the bound "
+            f"explicitly"
+        )
+    v = tbl.column("v").combine_chunks()
+    dim = v.offsets[1].as_py() - v.offsets[0].as_py() if len(v) else 0
+    return tbl.column("i").to_numpy(zero_copy_only=False), _list_to_matrix(v, dim)
 
 
 def cosine_topk(
@@ -77,17 +108,13 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
-    queries must be small (it is broadcast). Output:
-    (query_id, neighbor_id, cos) — self-matches excluded.
-    ``dim`` (a plan-time constant) skips the one-row probe job when the
-    caller already knows the embedding dimensionality.
+    queries must be small (it is collected and broadcast, at most
+    ``MAX_COLLECT_ROWS`` rows). Output: (query_id, neighbor_id, cos,
+    rank) — self-matches excluded; no rows for an empty query side.
     """
-    if dim is None:
-        dim = _vec_dim(corpus, vec_col)
     # Score in an Arrow-batched numpy stage (guide §4.2) with the
     # queries shipped once via SparkContext.broadcast — the Column
     # formulation (broadcast nested-loop join + a 64-term unrolled dot
@@ -98,11 +125,8 @@ def cosine_topk(
     # identical left-to-right IEEE double chain the unrolled Column sum
     # produced — results verified bit-identical, including float->
     # double element casts before each multiply.
-    qt = queries.select(
-        F.col(id_col).alias("i"), F.col(vec_col).alias("v")
-    ).toArrow()
-    q_ids_np = qt.column("i").to_numpy(zero_copy_only=False)
-    q_mat = np.array(qt.column("v").to_pylist(), dtype=np.float64).reshape(-1, dim)
+    q_ids_np, q_mat = _collect_vectors(queries, id_col, vec_col, MAX_COLLECT_ROWS)
+    dim = q_mat.shape[1]
     bc = corpus.sparkSession.sparkContext.broadcast((q_ids_np, q_mat))
     id_t = corpus.schema[id_col].dataType.simpleString()
 
@@ -122,11 +146,9 @@ def cosine_topk(
         qn = np.sqrt(qn)
         for b in batches:
             n = b.num_rows
-            if not n:
+            if not n or not nq:
                 continue
-            c = _list_to_matrix(b.column(1), n, dim).astype(
-                np.float64, copy=False
-            )
+            c = _list_to_matrix(b.column(1), dim)
             cn = np.zeros(n)
             for i in range(dim):
                 d = c[:, i]
@@ -152,9 +174,9 @@ def cosine_topk(
                 ["query_id", "neighbor_id", "cos"],
             )
 
-    src = _spread(
+    src = spread(
         corpus.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v")),
-        min_bytes=4 * 1024 * 1024,
+        skip_tiny=True,
     )
     scored = src.mapInArrow(
         score, schema=f"query_id {id_t}, neighbor_id {id_t}, cos double"
@@ -213,11 +235,10 @@ def _bucket_rows(
     vec_col: str,
     id_alias: str,
     planes_by_table: list[np.ndarray],
-    spread: bool = True,
 ) -> DataFrame:
     """(id, v, n, table, bucket) rows — one per LSH table per vector.
 
-    numpy sign-projection inside an Arrow-batched ``mapInPandas`` stage:
+    numpy sign-projection inside an Arrow-batched ``mapInArrow`` stage:
     X @ P.T for all tables at once, bits packed to an int64 bucket.
     A Column-expression formulation (n_tables x n_planes x dim unrolled
     terms) compiles megabytes of codegen and measured minutes of stall;
@@ -241,7 +262,7 @@ def _bucket_rows(
             if not b.num_rows:
                 continue
             ids, v = b.column(0), b.column(1)
-            x = _list_to_matrix(v, b.num_rows, dim)
+            x = _list_to_matrix(v, dim)
             n = pa.array(np.linalg.norm(x, axis=1))
             for t, planes in enumerate(planes_by_table):
                 bits = (x @ planes.T) >= 0
@@ -258,35 +279,21 @@ def _bucket_rows(
                 )
 
     # spread coarse scans (single-file tables arrive as ONE partition —
-    # guide §2.5) so the numpy projection parallelizes across the pool;
-    # callers pass spread=False for tiny broadcast-bound query sides
-    # (spreading 5 rows over 64 python tasks just costs task overhead)
+    # guide §2.5) so the numpy projection parallelizes across the pool.
     # id cast to long JVM-side: the Arrow batches pass through to the
     # declared long output column unconverted, so the input vector type
     # must already match (the old pandas path silently coerced)
-    src = df.select(
-        F.col(id_col).cast("long").alias("i"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+    src = spread(
+        df.select(
+            F.col(id_col).cast("long").alias("i"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        ),
+        skip_tiny=True,
     )
-    if spread:
-        src = _spread(src, min_bytes=4 * 1024 * 1024)
     return src.mapInArrow(
         stage,
         schema=f"{id_alias} long, v array<double>, n double, table int, bucket long",
     )
-
-
-def _list_to_matrix(v, num_rows: int, dim: int) -> np.ndarray:
-    """Arrow list<double> column -> (num_rows, dim) float64 matrix.
-
-    Zero-copy flatten when every row has exactly ``dim`` elements (the
-    operator contract); falls back to the per-row python path for
-    ragged/null inputs so error behavior matches the old pandas stage.
-    """
-    flat = v.flatten()
-    if len(flat) == num_rows * dim and v.null_count == 0:
-        return flat.to_numpy(zero_copy_only=False).reshape(num_rows, dim)
-    return np.array(v.to_pylist(), dtype=np.float64)
 
 
 def _cell_rows(
@@ -296,7 +303,6 @@ def _cell_rows(
     id_alias: str,
     centroids: np.ndarray,
     n_probe: int,
-    spread: bool = True,
 ) -> DataFrame:
     """(id, v, n, cell) rows — top n_probe centroid cells per vector,
     computed with one numpy matmul per Arrow batch. mapInArrow so the
@@ -311,7 +317,7 @@ def _cell_rows(
             if not b.num_rows:
                 continue
             ids, v = b.column(0), b.column(1)
-            x = _list_to_matrix(v, b.num_rows, dim)
+            x = _list_to_matrix(v, dim)
             n = np.maximum(np.linalg.norm(x, axis=1), 1e-12)
             na = pa.array(n)
             sims = (x / n[:, None]) @ centroids.T
@@ -322,44 +328,16 @@ def _cell_rows(
                     [id_alias, "v", "n", "cell"],
                 )
 
-    src = df.select(
-        F.col(id_col).cast("long").alias("i"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+    src = spread(
+        df.select(
+            F.col(id_col).cast("long").alias("i"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        ),
+        skip_tiny=True,
     )
-    if spread:
-        src = _spread(src, min_bytes=4 * 1024 * 1024)
     return src.mapInArrow(
         stage, schema=f"{id_alias} long, v array<double>, n double, cell int"
     )
-
-
-def _query_side_matrix(queries: DataFrame, id_col: str, vec_col: str):
-    """Driver-side (ids, float64 matrix, norms) of a SMALL query frame.
-
-    The query side of lsh_topk/ivf_topk is broadcast by contract, so
-    its signatures/cells don't need a distributed Python stage — a
-    per-query Arrow collect + numpy on the driver removes one
-    MapInArrow stage and its fixed worker-roundtrip latency from every
-    invocation (~0.2-0.3s, the dominant cost at small corpus sizes).
-    """
-    qt = queries.select(
-        F.col(id_col).cast("long").alias("i"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).toArrow()
-    ids = qt.column("i").to_numpy(zero_copy_only=False)
-    vchunk = qt.column("v").combine_chunks()
-    dim = len(vchunk[0]) if qt.num_rows else 0
-    x = _list_to_matrix(vchunk, qt.num_rows, dim).astype(np.float64, copy=False)
-    # raw norms — each caller applies (or skips) its stage's own clamp
-    n = np.linalg.norm(x, axis=1) if qt.num_rows else np.zeros(0)
-    return ids, x, n
-
-
-def _unit(a: Column, dim: int | None = None) -> Column:
-    n = norm(a, dim)
-    if dim:
-        return F.array(*[a[i] / n for i in range(dim)])
-    return F.transform(a, lambda x: x / n)
 
 
 def train_centroids(
@@ -399,27 +377,6 @@ def train_centroids(
     return cent.tolist()
 
 
-def _nearest_centroids(vec_col: Column, centroids: list[list[float]], n: int) -> Column:
-    """Array of the n centroid ids with highest cosine to the vector —
-    pure Column expressions (sort an array of (score, id) structs).
-    Centroid dots are unrolled constant-vector products: codegen-
-    compiled multiply-adds, no interpreted lambdas on the scan."""
-    dim = len(centroids[0])
-    v = vec_col.cast("array<double>")
-    inv_norm = F.lit(1.0) / norm(v, dim)
-    scored = F.array(
-        *[
-            F.struct(
-                (reduce(add, (v[i] * float(c[i]) for i in range(dim))) * inv_norm).alias("s"),
-                F.lit(ci).alias("c"),
-            )
-            for ci, c in enumerate(centroids)
-        ]
-    )
-    ranked = F.reverse(F.array_sort(scored))
-    return F.transform(F.slice(ranked, 1, n), lambda e: e["c"])
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -437,8 +394,7 @@ def ivf_topk(
 
     The scale path for ANN beyond LSH: the corpus assignment is a
     persistable column (partition the index table by ``_cell`` so a
-    query prunes to n_probe/n_centroids of the data). Everything is
-    Column expressions — no Python on the scan.
+    query prunes to n_probe/n_centroids of the data).
     """
     if centroids is None:
         centroids = train_centroids(
@@ -451,8 +407,11 @@ def ivf_topk(
     ).withColumnRenamed("n", "_cn")
     # query-side cells on the driver (the q frame is broadcast by
     # contract): same numpy ops as _cell_rows, one less Python stage
-    q_ids, qx, qn_raw = _query_side_matrix(queries, id_col, vec_col)
-    qn = np.maximum(qn_raw, 1e-12)
+    q_ids, qx = _collect_vectors(
+        queries.withColumn(id_col, F.col(id_col).cast("long")),
+        id_col, vec_col, MAX_COLLECT_ROWS,
+    )
+    qn = np.maximum(np.linalg.norm(qx, axis=1), 1e-12)
     sims = (qx / qn[:, None]) @ cent.T if len(q_ids) else np.zeros((0, len(cent)))
     top = np.argsort(-sims, axis=1)[:, :n_probe]
     import pandas as pd
@@ -474,7 +433,7 @@ def ivf_topk(
         F.col("neighbor_id") != F.col("query_id")
     )
     # per-candidate exact re-rank: unrolled dot over MATERIALIZED arrays
-    # (mapInPandas is a barrier — nothing re-evaluates inside the join)
+    # (mapInArrow is a barrier — nothing re-evaluates inside the join)
     scored = cands.withColumn(
         "cos", dot(F.col("_qv"), F.col("_cv"), dim) / (F.col("_qn") * F.col("_cn"))
     ).select("query_id", "neighbor_id", "cos").distinct()
@@ -491,15 +450,15 @@ def cosine_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    max_rows: int = 100_000,
+    max_rows: int = MAX_COLLECT_ROWS,
 ) -> DataFrame:
     """Exact embedding near-duplicate pairs: all (a < b) with
     cosine >= threshold.
 
     Vectorized block matmul: the (normalized) corpus matrix is shipped
-    once to every executor, and an Arrow-batched ``mapInPandas`` stage
+    once to every executor, and an Arrow-batched ``mapInArrow`` stage
     computes ``A_block @ B.T`` with numpy BLAS per batch — dense linear
-    algebra is the one place a vectorized pandas stage beats codegen
+    algebra is the one place a vectorized numpy stage beats codegen
     expressions by an order of magnitude (measured 20s -> ~2s on 2M
     pairs; a per-pair Column dot is re-evaluated inside the join loop).
 
@@ -509,36 +468,17 @@ def cosine_near_dup_pairs(
     blocks, one copy per executor), NOT closure capture (which would
     re-serialize it into every task binary).
 
-    ``max_rows`` makes the small-scale declaration EXECUTABLE: the
-    corpus is counted before it is collected, and a corpus past the
-    bound raises instead of silently materializing 100 TB on the
-    driver. Raise the bound deliberately if you really mean it.
+    ``max_rows`` makes the small-scale declaration EXECUTABLE: a corpus
+    past the bound raises instead of silently materializing 100 TB on
+    the driver. Raise the bound deliberately if you really mean it.
     """
-    # single pass: collect at most max_rows+1 rows — the guard triggers
-    # without ever materializing an oversized corpus on the driver, and
-    # without a separate count() job re-scanning the source. Arrow
-    # transfer (toArrow) instead of the row-based collect: 0.65s vs
-    # 2.26s for 20k vectors (guide §6 "Arrow for driver transfers").
-    tbl = (
-        df.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-        .limit(max_rows + 1)
-        .toArrow()
-    )
-    if tbl.num_rows > max_rows:
-        raise ValueError(
-            f"cosine_near_dup_pairs is the exact small-scale baseline: "
-            f"corpus exceeds max_rows={max_rows}; use lsh_near_dup_pairs "
-            f"at scale (or raise max_rows explicitly)"
-        )
-    ids = np.asarray(tbl.column("i").to_numpy(zero_copy_only=False), dtype=np.int64)
-    vchunk = tbl.column("v").combine_chunks()
-    mat = _list_to_matrix(
-        vchunk, tbl.num_rows, len(vchunk[0]) if tbl.num_rows else 0
-    ).astype(np.float64, copy=False)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    ids, mat = _collect_vectors(df, id_col, vec_col, max_rows)
+    ids = np.asarray(ids, dtype=np.int64)
+    # not in place: the collected matrix may be a read-only Arrow view
+    mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
     order = np.argsort(ids)
     bc = df.sparkSession.sparkContext.broadcast((ids[order], mat[order]))
-    dim = mat.shape[1] if tbl.num_rows else 0
+    dim = mat.shape[1]
 
     # mapInArrow: the probe-side vectors come off the batch zero-copy
     # (flatten+reshape) instead of a per-row object-array conversion
@@ -550,9 +490,7 @@ def cosine_near_dup_pairs(
             if not b.num_rows:
                 continue
             a_ids = b.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            a = _list_to_matrix(b.column(1), b.num_rows, dim).astype(
-                np.float64, copy=False
-            )
+            a = _list_to_matrix(b.column(1), dim)
             a = a / np.maximum(np.linalg.norm(a, axis=1, keepdims=True), 1e-12)
             sims = a @ mat.T
             r, c = np.where(sims >= threshold)
@@ -569,9 +507,9 @@ def cosine_near_dup_pairs(
     # spread the probe side: the whole corpus-sized matmul otherwise
     # runs in ONE task when the input is a single-file scan (guide
     # §2.5) — measured 19.5s -> ~1s at 20k vectors on 32 cores
-    src = _spread(
+    src = spread(
         df.select(F.col(id_col).cast("long").alias("i"), F.col(vec_col).alias("v")),
-        min_bytes=4 * 1024 * 1024,
+        skip_tiny=True,
     )
     return src.mapInArrow(score, schema="id_a long, id_b long, cos double")
 
@@ -667,9 +605,13 @@ def lsh_topk(
 
     weights = [1 << i if i < 63 else -(1 << 63) for i in range(n_planes)]
     wv = np.array(weights, dtype=np.int64)
-    q_ids, qx, qn = _query_side_matrix(queries, id_col, vec_col)
+    q_ids, qx = _collect_vectors(
+        queries.withColumn(id_col, F.col(id_col).cast("long")),
+        id_col, vec_col, MAX_COLLECT_ROWS,
+    )
+    qn = np.linalg.norm(qx, axis=1)
     frames = []
-    for t, pl in enumerate(planes):
+    for t, pl in enumerate(planes if len(q_ids) else ()):
         buckets = ((qx @ pl.T) >= 0).astype(np.int64) @ wv
         frames.append(
             pd.DataFrame(

@@ -9,7 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logstash_filter_elasticsearch_spark.operators.dedup import _spread, normalize_text
+from logstash_filter_elasticsearch_spark.operators.dedup import normalize_text
+from logstash_filter_elasticsearch_spark.operators.layout import spread
 
 # BPE-ish pre-tokenizer regex: word pieces OR single non-space symbols
 BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -59,7 +60,7 @@ def quality_features(df: DataFrame, text_col: str) -> DataFrame:
     rounded (explicit HALF_UP) to 6 dp so engine/oracle float paths
     agree on every input, including exact-half boundaries.
     """
-    df = _spread(df)  # regex-heavy: parallelize single-file scans (§2.5)
+    df = spread(df)  # regex-heavy: parallelize single-file scans (§2.5)
     text = F.col(text_col)
     n_chars = F.length(text)
     words = F.split(F.trim(text), r"\s+")
@@ -89,7 +90,7 @@ def quality_features(df: DataFrame, text_col: str) -> DataFrame:
 def lang_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFrame:
     """Heuristic language ID by marker-word counts; deterministic
     tie-break = alphabetical language order; 'und' if zero evidence."""
-    df = _spread(df)  # regex-heavy: parallelize single-file scans (§2.5)
+    df = spread(df)  # regex-heavy: parallelize single-file scans (§2.5)
     text = F.col(text_col)
     scores = {
         lang: sum(

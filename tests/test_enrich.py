@@ -296,3 +296,24 @@ def test_sort_missing_value_semantics(spark):
     assert vals([("rank", "desc", "_first")]) == ["b", "a", "c"]
     assert vals([("rank", "asc", 7)]) == ["c", "b", "a"]    # custom: 5,7,10
     assert vals([("rank", "desc", 7)]) == ["a", "b", "c"]
+
+
+def test_sort_path_through_map_column(spark):
+    """A sort path that walks into a map (not a struct) has no schema
+    type to resolve; it still sorts, on the collect_list path."""
+    events = spark.createDataFrame([("e1", 1)], "event_id string, key long")
+    lookup = spark.createDataFrame(
+        [(1, {"r": 10}, "a"), (1, {"r": 5}, "b"), (1, {"r": 7}, "c")],
+        "join_key long, m map<string,long>, val string",
+    )
+
+    def vals(sort, size):
+        spec = EnrichSpec(
+            event_key="key", lookup_key="join_key",
+            fields={"val": "vals"}, result_size=size, sort=sort,
+        )
+        return Enricher(spec).apply(events, lookup).collect()[0]["vals"]
+
+    assert vals([("m.r", "asc")], 10) == ["b", "c", "a"]
+    assert vals([("m.r", "desc")], 10) == ["a", "c", "b"]
+    assert vals([("m.r", "desc")], 1) == ["a"]

@@ -430,29 +430,6 @@ def test_snapshot_gc_protects_inflight_runs(spark, seq_data, tmp_path_factory):
     assert not os.path.exists(inflight)  # grace expired -> crashed debris
 
 
-def test_committed_route_paths_legacy_manifest(tmp_path_factory):
-    """Pre-path manifests resolve by unescaping the ACTUAL sink dir
-    names — Spark leaves spaces unescaped, so re-escaping the route
-    with urllib would miss 'route=a b%3Ac'."""
-    from logstash_filter_elasticsearch_spark.pipeline import committed_route_paths
-
-    out = str(tmp_path_factory.mktemp("legacy_paths"))
-    sink = os.path.join(out, "sinks", "route=a b%3Ac")
-    os.makedirs(sink)
-    manifest = {
-        "version": 1,
-        "runs": [],
-        "routes": {
-            "a b:c": {"run_id": "r", "metrics": {}, "lineage": {}},  # no path
-            "gone": {"run_id": "r", "metrics": {}, "lineage": {}},
-        },
-    }
-    with open(os.path.join(out, "_MANIFEST.json"), "w") as f:
-        json.dump(manifest, f)
-    paths = committed_route_paths(out)
-    assert paths == {"a b:c": sink}  # resolved; missing-dir route skipped
-
-
 def test_sink_format_orc_end_to_end(spark, seq_data, tmp_path_factory):
     """sink_format is a real parameter, not parquet-only plumbing: the
     same pipeline (staged write, typed metrics read-back, publish,

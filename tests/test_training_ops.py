@@ -314,6 +314,88 @@ def test_cosine_near_dup_exact_vs_numpy(spark):
     assert got == exp and (3, 7) in got and (4, 9) in got
 
 
+def test_cosine_near_dup_array_double(spark):
+    """array<double> vectors arrive as a read-only zero-copy view; the
+    driver-side normalisation must not write into it."""
+    import numpy as np
+    from logstash_filter_elasticsearch_spark.operators.similarity import (
+        cosine_near_dup_pairs,
+    )
+
+    rng = np.random.default_rng(6)
+    vecs = rng.standard_normal((12, 4))
+    vecs[5] = vecs[2] * 3.0
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
+    )
+    got = {(r.id_a, r.id_b) for r in cosine_near_dup_pairs(df, threshold=0.95).collect()}
+    M = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    sims = M @ M.T
+    assert got == {(a, b) for a in range(12) for b in range(a + 1, 12) if sims[a][b] >= 0.95}
+    assert (2, 5) in got
+
+
+def test_list_to_matrix_rejects_ragged_and_null():
+    import pyarrow as pa
+    from logstash_filter_elasticsearch_spark.operators.similarity import _list_to_matrix
+
+    # lengths 1 + 3 sum to 2 * 2: must not be re-sliced into [[1,2],[3,4]]
+    with pytest.raises(ValueError, match="length"):
+        _list_to_matrix(pa.array([[1.0], [2.0, 3.0, 4.0]]), 2)
+    with pytest.raises(ValueError, match="null"):
+        _list_to_matrix(pa.array([[1.0, 2.0], None]), 2)
+    # a sliced batch is checked on its own rows; float input is widened
+    v = pa.array([[1.0], [2.0, 3.0], [4.0, 5.0]], pa.list_(pa.float32())).slice(1)
+    m = _list_to_matrix(v, 2)
+    assert m.dtype == "float64" and m.tolist() == [[2.0, 3.0], [4.0, 5.0]]
+
+
+def _vec_frame(spark, n=20, dim=8):
+    import numpy as np
+
+    vecs = np.random.default_rng(4).standard_normal((n, dim)).astype("float32")
+    return spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id int, embedding array<float>"
+    )
+
+
+def test_topk_empty_query_side_returns_no_rows(spark):
+    from logstash_filter_elasticsearch_spark.operators.similarity import ivf_topk
+
+    df = _vec_frame(spark)
+    none = df.filter(F.col("vec_id") < 0)
+    assert cosine_topk(df, none, k=3).collect() == []
+    assert lsh_topk(df, none, k=3, dim=8, n_planes=4, n_tables=2).collect() == []
+    assert ivf_topk(df, none, k=3, n_centroids=4, n_probe=2).collect() == []
+
+
+def test_topk_query_side_is_bounded(spark, monkeypatch):
+    from logstash_filter_elasticsearch_spark.operators import similarity
+    from logstash_filter_elasticsearch_spark.operators.similarity import ivf_topk
+
+    monkeypatch.setattr(similarity, "MAX_COLLECT_ROWS", 2, raising=False)
+    df = _vec_frame(spark)
+    queries = df.filter(F.col("vec_id") < 3)
+    with pytest.raises(ValueError, match="max_rows=2"):
+        cosine_topk(df, queries, k=3)
+    with pytest.raises(ValueError, match="max_rows=2"):
+        lsh_topk(df, queries, k=3, dim=8, n_planes=4, n_tables=2)
+    with pytest.raises(ValueError, match="max_rows=2"):
+        ivf_topk(df, queries, k=3, n_centroids=4, n_probe=2)
+
+
+def test_layout_decisions(spark):
+    from logstash_filter_elasticsearch_spark.operators.layout import spread
+
+    one = spark.range(1000).coalesce(1)
+    assert spread(one).rdd.getNumPartitions() == 4  # round-robin to shuffle partitions
+    assert spread(one, skip_tiny=True) is one  # a few KB: below TINY_PLAN_BYTES
+    keyed = spread(one, by=["id"])._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(id" in keyed
+    wide = spark.range(1000).repartition(2)
+    assert spread(wide) is wide  # 2 * 4 > 4 shuffle partitions: already spread
+
+
 def test_lsh_near_dup_finds_planted(spark):
     import numpy as np
     from logstash_filter_elasticsearch_spark.operators.similarity import (

@@ -27,18 +27,19 @@ from logstash_filter_elasticsearch_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    normalize_text,
     simhash,
 )
 from logstash_filter_elasticsearch_spark.operators.enrich import EnrichSpec, Enricher
 from logstash_filter_elasticsearch_spark.operators.layout import spread
 from logstash_filter_elasticsearch_spark.operators.similarity import cosine_topk, lsh_topk
 from logstash_filter_elasticsearch_spark.operators.text import (
-    BPE_ISH,
     LANG_MARKERS,
     STOPWORDS,
+    bpe_ish_token_count,
+    fingerprint_md5,
     lang_id,
     quality_features,
+    whitespace_token_count,
 )
 from logstash_filter_elasticsearch_spark.plans.esql import run_esql
 
@@ -410,16 +411,14 @@ def q_token_counts(spark, sf_dir):
     docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return docs.select(
         "doc_id",
-        F.size(F.split(F.trim("text"), r"\s+")).alias("ws_tokens"),
-        F.size(F.regexp_extract_all("text", F.lit(BPE_ISH), 0)).alias("bpe_tokens"),
+        whitespace_token_count(F.col("text")).alias("ws_tokens"),
+        bpe_ish_token_count(F.col("text")).alias("bpe_tokens"),
     )
 
 
 def q_fingerprint(spark, sf_dir):
     docs = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    return docs.select(
-        "doc_id", F.md5(normalize_text(F.col("text"))).alias("fingerprint")
-    )
+    return fingerprint_md5(docs, "text").select("doc_id", "fingerprint")
 
 
 def q_multimodal_meta(spark, sf_dir):

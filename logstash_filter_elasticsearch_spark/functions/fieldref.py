@@ -39,11 +39,6 @@ def field_ref_to_path(ref: str) -> str:
     return ref
 
 
-def path_col(path: str) -> Column:
-    """Dotted path -> Column, tolerant of ``[a][b]`` references."""
-    return F.col(field_ref_to_path(path))
-
-
 def sprintf_expr(template: str) -> Column:
     """``"logs-%{[source]}-%{[lang]}"`` -> concat expression column.
 

@@ -374,10 +374,9 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_perm: int = 64, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signature per document: num_perm seeded xxhash64 minima.
+def minhash_signatures(shingles: DataFrame, num_perm: int = 64) -> DataFrame:
+    """MinHash signature per document of a ``(_id, _sh)`` shingle-array
+    frame: num_perm seeded xxhash64 minima.
 
     Shape chosen for scale: explode shingles once, then ONE grouped
     aggregate with num_perm min(xxhash64(shingle, seed_i)) columns —
@@ -387,23 +386,7 @@ def minhash_signatures(
     row but runs interpreted — higher-order functions don't codegen —
     and was ~100x slower on long documents.)
     """
-    # persist the unexploded arrays: exploding straight off the regex
-    # projection re-evaluates the shingle extraction per OUTPUT row
-    # (Generate inlines computed generator expressions; measured ~10x).
-    # The same cache is shared with the verify pass in
-    # minhash_lsh_pairs (identical plan -> CacheManager reuses it).
-    from pyspark import StorageLevel
-
-    arr = (
-        with_word_shingles(
-            spread(df.select(F.col(id_col).alias("_id"), text_col)),
-            text_col,
-            shingle_n,
-        )
-        .select("_id", "_sh")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sh = arr.select("_id", F.explode("_sh").alias("_s"))
+    sh = shingles.select("_id", F.explode("_sh").alias("_s"))
     mins = [
         F.min(F.xxhash64("_s", F.lit(i))).alias(f"_m{i}") for i in range(num_perm)
     ]
@@ -438,7 +421,24 @@ def minhash_lsh_pairs(
     """
     assert num_perm % bands == 0
     r = num_perm // bands
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_n)
+    from pyspark import StorageLevel
+
+    # persist the unexploded shingle arrays ONCE: the signature step
+    # explodes them (exploding straight off the regex projection
+    # re-evaluates the shingle extraction per OUTPUT row — Generate
+    # inlines computed generator expressions; measured ~10x), and both
+    # sides of the exact-verify join read them (released by the
+    # ContextCleaner with the result)
+    docs = (
+        with_word_shingles(
+            spread(df.select(F.col(id_col).alias("_id"), text_col)),
+            text_col,
+            shingle_n,
+        )
+        .select("_id", "_sh")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    sigs = minhash_signatures(docs, num_perm)
 
     band_rows = sigs.select(
         "_id",
@@ -468,8 +468,6 @@ def minhash_lsh_pairs(
         # Lifecycle: the returned plan references this cache, and
         # Spark's ContextCleaner unpersists it once the caller drops
         # the result DataFrame — it is not pinned for the session.
-        from pyspark import StorageLevel
-
         band_rows = band_rows.persist(StorageLevel.MEMORY_AND_DISK)
         band_rows = _drop_heavy_keys(band_rows, ["band", "bhash"], bucket_cap)
     posting = band_rows.groupBy("band", "bhash").agg(
@@ -482,16 +480,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    # exact verify on the candidate set only; persisted because BOTH
-    # candidate join sides read it — otherwise the shingle extraction
-    # runs once per side (released by the ContextCleaner with the
-    # result)
-    docs = with_word_shingles(
-        spread(df.select(F.col(id_col).alias("_id"), text_col)), text_col, shingle_n
-    ).select("_id", "_sh")
-    from pyspark import StorageLevel
-
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    # exact verify on the candidate set only
     verified = (
         candidates.join(docs.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a")
         .join(docs.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sh_b")), "id_b")

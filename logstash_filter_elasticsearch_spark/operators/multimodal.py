@@ -49,11 +49,6 @@ DECODED_SCHEMA = (
 WAV_SAMPLE_RATE = 8000
 
 
-def attach_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Native metadata: byte length + declared mime sanity flag."""
-    return df.withColumn("n_bytes", F.length(F.col(payload_col)))
-
-
 # ---------------------------------------------------------------- encoders
 
 def make_bmp(width: int, height: int, pixel_source: bytes) -> bytes:

@@ -110,18 +110,3 @@ def fingerprint_md5(df: DataFrame, text_col: str, out_col: str = "fingerprint") 
     """Content fingerprint: md5 of normalized text (oracle-identical)."""
     return df.withColumn(out_col, F.md5(normalize_text(F.col(text_col))))
 
-
-def rolling_hash(df: DataFrame, text_col: str, out_col: str = "rhash") -> DataFrame:
-    """Polynomial rolling hash over words (base 1000003, 64-bit wrap).
-
-    Deterministic and order-sensitive — a cheap streamable fingerprint.
-    F.aggregate keeps it a single codegen expression.
-    """
-    words = F.split(normalize_text(F.col(text_col)), " ")
-    h = F.aggregate(
-        words,
-        F.lit(1469598103934665603).cast("long"),  # FNV offset basis
-        lambda acc, w: acc * F.lit(1000003).cast("long")
-        + F.xxhash64(w, F.lit(7)),
-    )
-    return df.withColumn(out_col, h)

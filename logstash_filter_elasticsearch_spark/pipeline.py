@@ -235,10 +235,13 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     snapshot_mode = cfg.publish_mode == "snapshot"
     if cfg.publish_mode not in ("rename", "snapshot"):
         raise ValueError(f"publish_mode must be rename|snapshot, got {cfg.publish_mode!r}")
+    # the staging dir name must not start with '_' or '.': Spark treats
+    # such a directory as hidden and warns "All paths were ignored" on
+    # the staged-metrics load below
     staging = (
         os.path.join(cfg.out_dir, "snapshots", run_id)
         if snapshot_mode
-        else os.path.join(cfg.out_dir, f"_staging_{run_id}")
+        else os.path.join(cfg.out_dir, f"staging-{run_id}")
     )
     writable = df
     if committed_before:  # resume: skip already-committed sinks

@@ -9,6 +9,15 @@ Here the pipe pipeline compiles directly onto the DataFrame API —
 ``RENAME``→withColumnRenamed, ``EVAL``→withColumn — so Catalyst gets the
 whole logical plan (pushdown/pruning/fold) instead of a remote engine.
 
+How the text nests — string literals (with backslash escapes), ``()``
+and ``[]`` — is known in one place, :class:`_Scan`: one forward pass
+records per index whether it is quoted, its bracket depth, and the
+partner of every bracket and quote. The pipe, comma and argument
+splitters, the keyword finder, the FORK splitter and the operand and
+group matchers of the rewrite passes all read that record; unbalanced
+brackets fail there, once, with their position. Only the triple-quote
+pre-pass, which rewrites the text before any scan, tracks quotes itself.
+
 Named-parameter validation reproduces elasticsearch.rb:462-481:
 placeholder grammar ``^[a-z_][a-z0-9_]*$``, and the placeholder set
 must exactly match the param set (missing/unused both raise).
@@ -101,7 +110,8 @@ class EsqlValidationError(ValueError):
 
 
 class _QuoteState:
-    """Shared quote/escape tracker for every single-pass scanner here.
+    """Quote/escape tracker shared by :class:`_Scan` and the triple-quote
+    pre-pass.
 
     Inside a quote a backslash escapes the next character (ES|QL string
     literals support ``\\"`` — an escaped quote must NOT close the
@@ -131,31 +141,95 @@ class _QuoteState:
             self.quote = ch
 
 
-def _quote_segments(s: str) -> list[tuple[bool, str]]:
-    """Split into (is_quoted, segment) runs — same single-pass scanning
-    as ``_split_pipes``. Rewrites (operator translation, placeholder
-    substitution) apply ONLY to unquoted segments, so a string literal
-    containing ``==``, ``?name``, or an escaped quote passes through
-    untouched."""
-    segs: list[tuple[bool, str]] = []
-    buf: list[str] = []
-    q = _QuoteState()
-    for ch in s:
-        was_quoted = q.in_quote
-        q.feed(ch)
-        if was_quoted:
-            buf.append(ch)
-            if not q.in_quote:  # this char closed the literal
-                segs.append((True, "".join(buf)))
-                buf = []
-        elif q.in_quote:  # this char opened a literal
-            if buf:
-                segs.append((False, "".join(buf)))
-            buf = [ch]
+class _Scan:
+    """The one structural scan of ES|QL (and translated SQL) text.
+
+    One forward pass records, per index, whether the character belongs
+    to a string literal (``quoted``, delimiters included) and how many
+    brackets enclose it (``depth``; a bracket sits at the depth of its
+    surroundings), plus ``match``: every bracket's partner index and
+    every literal's opening <-> closing quote index. ``()`` and ``[]``
+    nest alike everywhere, so a ``|``, ``,`` or keyword inside a
+    ``[...]`` multivalue literal is never a separator. An unbalanced or
+    mismatched bracket outside quotes raises once, with its position.
+    Every splitter and matcher in this module reads this record; none
+    keeps its own depth counter."""
+
+    __slots__ = ("text", "quoted", "depth", "match")
+
+    def __init__(self, text: str):
+        n = len(text)
+        quoted, depth, match = bytearray(n), [0] * n, {}
+        q = _QuoteState()
+        stack: list[int] = []
+        opened = -1
+        for i, ch in enumerate(text):
+            depth[i] = len(stack)
+            if q.in_quote:
+                quoted[i] = 1
+                q.feed(ch)
+                if not q.in_quote:
+                    match[opened], match[i] = i, opened
+            elif ch in ("'", '"'):
+                quoted[i] = 1
+                opened = i
+                q.feed(ch)
+            elif ch in "([":
+                stack.append(i)
+            elif ch in ")]":
+                if not stack or text[stack[-1]] + ch not in ("()", "[]"):
+                    raise EsqlValidationError(
+                        f"unbalanced {ch!r} at position {i} in {text!r}"
+                    )
+                o = stack.pop()
+                depth[i] = len(stack)
+                match[o], match[i] = i, o
+        if stack:
+            raise EsqlValidationError(
+                f"unclosed {text[stack[-1]]!r} at position {stack[-1]} "
+                f"in {text!r}"
+            )
+        self.text, self.quoted, self.depth, self.match = text, quoted, depth, match
+
+    def top(self, ch: str, group: int | None = None) -> list[int]:
+        """Indices of the unquoted character ``ch`` directly inside the
+        bracket group opening at index ``group`` — by default, at depth
+        0."""
+        if group is None:
+            lo, hi, level = 0, len(self.text), 0
         else:
-            buf.append(ch)
-    if buf:
-        segs.append((q.in_quote, "".join(buf)))
+            lo, hi, level = group + 1, self.match[group], self.depth[group] + 1
+        t, quoted, depth = self.text, self.quoted, self.depth
+        return [
+            i for i in range(lo, hi)
+            if t[i] == ch and depth[i] == level and not quoted[i]
+        ]
+
+    def split(self, sep: str, group: int | None = None) -> list[str]:
+        """Raw (unstripped) pieces between the separators :meth:`top`
+        finds — of the whole text, or of the inside of ``group``."""
+        lo, hi = (-1, len(self.text)) if group is None else (group, self.match[group])
+        cuts = [lo, *self.top(sep, group), hi]
+        return [self.text[a + 1 : b] for a, b in zip(cuts, cuts[1:])]
+
+
+def _quote_segments(s: str) -> list[tuple[bool, str]]:
+    """Split into (is_quoted, segment) runs, each literal bounded by its
+    quotes in the scan's ``match``. Rewrites (operator translation,
+    placeholder substitution) apply ONLY to unquoted segments, so a
+    string literal containing ``==``, ``?name``, or an escaped quote
+    passes through untouched."""
+    sc = _Scan(s)
+    segs: list[tuple[bool, str]] = []
+    i = 0
+    while i < len(s):
+        if sc.quoted[i]:  # an unterminated literal runs to the end
+            j = sc.match.get(i, len(s) - 1) + 1
+        else:
+            j = sc.quoted.find(1, i)
+            j = len(s) if j < 0 else j
+        segs.append((bool(sc.quoted[i]), s[i:j]))
+        i = j
     return segs
 
 
@@ -306,9 +380,9 @@ def _convert_triple_quotes(query: str) -> str:
     """ES|QL triple-quoted RAW strings (``\"\"\"pattern\"\"\"``: no
     escape processing, cannot contain ``\"\"\"``) -> ordinary
     double-quoted literals with the content backslash-escaped, applied
-    on the raw statement BEFORE any other scanning so every downstream
-    quote tracker sees only normal strings. A ``\"\"\"`` inside a
-    normal string literal (``'\"\"\"'``) is data and stays put."""
+    on the raw statement BEFORE :class:`_Scan` runs, so the scan sees
+    only normal strings. A ``\"\"\"`` inside a normal string literal
+    (``'\"\"\"'``) is data and stays put."""
     out: list[str] = []
     q = _QuoteState()
     i = 0
@@ -924,37 +998,6 @@ def _translate_call(fn: str, args: list[str]) -> str:
     raise AssertionError(f"unhandled mapped fn {fn}")
 
 
-def _parse_args(s: str, open_paren: int) -> tuple[list[str], int]:
-    """Top-level args of the call whose '(' is at ``open_paren``; returns
-    (args, index_past_close_paren). Quote-, escape- and paren-aware."""
-    depth = 1
-    q = _QuoteState()
-    args: list[str] = []
-    buf: list[str] = []
-    i = open_paren + 1
-    while i < len(s):
-        ch = s[i]
-        if q.in_quote:
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                args.append("".join(buf).strip())
-                return args, i + 1
-            buf.append(ch)
-        elif ch == "," and depth == 1:
-            args.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        q.feed(ch)
-        i += 1
-    raise EsqlValidationError(f"unbalanced parens in {s!r}")
-
-
 # ES|QL `value::type` cast-shorthand type names -> the canonical TO_*
 # call, so `::` inherits the same null-on-malformed try_cast semantics
 # (and `::ip` the custom v4 validation) instead of passing through to
@@ -973,73 +1016,34 @@ _OPERAND_CHARS = frozenset(
 )
 
 
-def _scan_structure(expr: str, stop_at: str | None = None):
-    """Forward structural scan: record every closing paren's matching
-    open index and every closing quote's opening index (so a ``(``
-    inside a string literal can never desynchronize a backward operand
-    scan). If ``stop_at`` is given, also return the index of its first
-    unquoted occurrence (or -1)."""
-    q = _QuoteState()
-    paren_stack: list[int] = []
-    match_open: dict[int, int] = {}
-    str_open: dict[int, int] = {}
-    open_quote = -1
-    found = -1
-    i = 0
-    while i < len(expr):
-        ch = expr[i]
-        if q.in_quote:
-            was = q.quote
-            q.feed(ch)
-            if not q.in_quote and ch == was:
-                str_open[i] = open_quote
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            open_quote = i
-            q.feed(ch)
-            i += 1
-            continue
-        if ch == "(":
-            paren_stack.append(i)
-        elif ch == ")":
-            if paren_stack:
-                match_open[i] = paren_stack.pop()
-        elif stop_at and expr.startswith(stop_at, i):
-            found = i
-            break
-        i += 1
-    return match_open, str_open, found
-
-
-def _operand_start(
-    expr: str, j: int, match_open: dict[int, int], str_open: dict[int, int]
-) -> int:
+def _operand_start(sc: _Scan, j: int) -> int:
     """Start index of the postfix operand ENDING at ``j`` (exclusive):
     a closing paren pulls in the whole call (function name included), a
-    closing quote the string literal, else an identifier/number run."""
-    if expr[j - 1] == ")" and (j - 1) in match_open:
-        start = match_open[j - 1]
-        while start > 0 and expr[start - 1] in _OPERAND_CHARS:
-            start -= 1
-        return start
-    if expr[j - 1] in ("'", '"') and (j - 1) in str_open:
-        return str_open[j - 1]
-    start = j
-    while start > 0 and expr[start - 1] in _OPERAND_CHARS:
-        start -= 1
-    return start
+    closing quote the string literal, else an identifier/number run.
+    The scan's ``match`` pairs them, so a ``(`` inside a string literal
+    can never desynchronize this backward walk."""
+    s = sc.text
+    if s[j - 1] in ("'", '"'):
+        return sc.match[j - 1]
+    if s[j - 1] == ")":
+        j = sc.match[j - 1]
+    while j > 0 and s[j - 1] in _OPERAND_CHARS:
+        j -= 1
+    return j
 
 
 def _rewrite_colon_cast(expr: str) -> str:
     """Rewrite ES|QL ``operand::type`` into ``TO_<TYPE>(operand)``.
 
-    Operand resolution via :func:`_scan_structure` /
+    The first unquoted ``::`` is found in the scan; its operand via
     :func:`_operand_start`. Chained casts (``x::long::string``)
     resolve leftmost-first across iterations.
     """
     while True:
-        match_open, str_open, idx = _scan_structure(expr, stop_at="::")
+        sc = _Scan(expr)
+        idx = expr.find("::")
+        while idx >= 0 and sc.quoted[idx]:
+            idx = expr.find("::", idx + 1)
         if idx < 0:
             return expr
         m = re.match(r"\s*([A-Za-z_]+)", expr[idx + 2 :])
@@ -1058,7 +1062,7 @@ def _rewrite_colon_cast(expr: str) -> str:
             j -= 1
         if j == 0:
             raise EsqlValidationError("'::' has no operand")
-        start = _operand_start(expr, j, match_open, str_open)
+        start = _operand_start(sc, j)
         if start == j:
             raise EsqlValidationError("'::' has no operand")
         expr = f"{expr[:start]}{fn}({expr[start:j]}){expr[tail:]}"
@@ -1081,25 +1085,24 @@ def _translate_expr(expr: str) -> str:
     # `value::type` shorthand first: canonicalized to TO_*() calls so
     # the loop below gives it try_cast (null-on-malformed) semantics
     expr = _rewrite_colon_cast(expr)
+    sc = _Scan(expr)
     out: list[str] = []
     pos = 0
-    q = _QuoteState()
     while pos < len(expr):
         ch = expr[pos]
-        if q.in_quote or ch in ("'", '"'):
+        if sc.quoted[pos]:
             out.append(ch)
-            q.feed(ch)
             pos += 1
             continue
         m = _ESQL_FN_RE.match(expr, pos)
         if m:
             fn = m.group(1).upper()
-            args, end = _parse_args(expr, m.end() - 1)
-            args = [_translate_expr(a) for a in args]
+            open_at = m.end() - 1
+            args = [_translate_expr(a.strip()) for a in sc.split(",", open_at)]
             if args == [""]:  # zero-arg call, e.g. NOW()
                 args = []
             out.append(_translate_call(fn, args))
-            pos = end
+            pos = sc.match[open_at] + 1
             continue
         if expr.startswith("==", pos):
             out.append("=")
@@ -1121,53 +1124,19 @@ def _translate_expr(expr: str) -> str:
 
 
 def _split_pipes(query: str) -> list[str]:
-    """Split on top-level '|' respecting quoted strings (incl. escapes)
-    and parentheses — a '|' inside FORK's (branch) groups belongs to
-    the branch's own pipe list, not the outer statement."""
-    parts, buf, depth = [], [], 0
-    q = _QuoteState()
-    for ch in query:
-        if q.in_quote:
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth = max(depth - 1, 0)
-            buf.append(ch)
-        elif ch == "|" and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        q.feed(ch)
-    parts.append("".join(buf).strip())
-    return [p for p in parts if p]
+    """Split on top-level '|' — a '|' inside FORK's (branch) groups
+    belongs to the branch's own pipe list, not the outer statement."""
+    return [p.strip() for p in _Scan(query).split("|") if p.strip()]
 
 
 def _split_commas(s: str) -> list[str]:
-    """Split on top-level commas (not inside parens, brackets — ES|QL
-    multivalue literals ``[1, 2, 3]`` — or quotes)."""
-    parts, buf, depth = [], [], 0
-    q = _QuoteState()
-    for ch in s:
-        if q.in_quote:
-            buf.append(ch)
-        elif ch in "([":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        q.feed(ch)
-    if buf:
-        parts.append("".join(buf).strip())
-    return parts
+    """Split on top-level commas (not inside brackets — ES|QL
+    multivalue literals ``[1, 2, 3]`` included — or quotes); a trailing
+    empty piece (``a,``) is dropped."""
+    parts = _Scan(s).split(",")
+    if not parts[-1]:
+        parts.pop()
+    return [p.strip() for p in parts]
 
 
 def _expand_col_patterns(df: DataFrame, items: list[str]) -> list[str]:
@@ -1196,28 +1165,13 @@ def _expand_col_patterns(df: DataFrame, items: list[str]) -> list[str]:
 
 def _find_top_keyword(s: str, kw: str) -> int:
     """Index of the first depth-0, unquoted, word-boundary occurrence of
-    ``kw`` (case-insensitive), or -1 — the quote/paren-aware analogue of
+    ``kw`` (case-insensitive), or -1 — the scan-aware analogue of
     ``re.search(r"\\bKW\\b")``, so a string literal containing the
     keyword is never misparsed."""
-    depth = 0
-    q = _QuoteState()
-    up, kw = s.upper(), kw.upper()
-    k = len(kw)
-    for i, ch in enumerate(s):
-        if q.in_quote:
-            pass
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and up.startswith(kw, i)
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and (i + k >= len(s) or not (s[i + k].isalnum() or s[i + k] == "_"))
-        ):
-            return i
-        q.feed(ch)
+    sc = _Scan(s)
+    for m in re.finditer(rf"(?<!\w){re.escape(kw)}(?!\w)", s, re.I):
+        if sc.depth[m.start()] == 0 and not sc.quoted[m.start()]:
+            return m.start()
     return -1
 
 
@@ -1281,37 +1235,15 @@ def _rewrite_div_mod(s: str) -> str:
     """
 
     # -- recurse into paren groups, making them opaque ----------------
+    sc = _Scan(s)
     out: list[str] = []
-    i, n = 0, len(s)
-    q = _QuoteState()
-    while i < n:
-        ch = s[i]
-        if q.in_quote or ch in ("'", '"'):
-            out.append(ch)
-            q.feed(ch)
-            i += 1
-            continue
-        if ch == "(":
-            j, d = i + 1, 1
-            q2 = _QuoteState()
-            while j < n and d:
-                c2 = s[j]
-                if not q2.in_quote and c2 == "(":
-                    d += 1
-                elif not q2.in_quote and c2 == ")":
-                    d -= 1
-                    if not d:
-                        break
-                q2.feed(c2)
-                j += 1
-            inner = s[i + 1 : j]
-            parts = _split_commas(inner)
-            out.append("(" + ", ".join(_rewrite_div_mod(p) for p in parts) + ")")
-            i = j + 1
-            continue
-        out.append(ch)
-        q.feed(ch)
-        i += 1
+    i = 0
+    for o in sc.top("("):
+        parts = _split_commas(s[o + 1 : sc.match[o]])
+        out.append(s[i:o])
+        out.append("(" + ", ".join(_rewrite_div_mod(p) for p in parts) + ")")
+        i = sc.match[o] + 1
+    out.append(s[i:])
     flat = "".join(out)
 
     # -- tokenize depth-0 text into atoms and binary operators --------
@@ -1328,30 +1260,18 @@ def _rewrite_div_mod(s: str) -> str:
 
     tokens: list[str] = []  # alternating operand, op, operand, ...
     buf2: list[str] = []
-    q = _QuoteState()
+    sf = _Scan(flat)
     i = 0
     case_depth = 0
     while i < len(flat):
         ch = flat[i]
-        if q.in_quote or ch in ("'", '"'):
+        if sf.quoted[i]:
             buf2.append(ch)
-            q.feed(ch)
             i += 1
             continue
         if ch == "(":  # opaque group: copy through to its close
-            d = 1
-            buf2.append(ch)
-            i += 1
-            q2 = _QuoteState()
-            while i < len(flat) and d:
-                c2 = flat[i]
-                if not q2.in_quote and c2 == "(":
-                    d += 1
-                elif not q2.in_quote and c2 == ")":
-                    d -= 1
-                q2.feed(c2)
-                buf2.append(c2)
-                i += 1
+            buf2.append(flat[i : sf.match[i] + 1])
+            i = sf.match[i] + 1
             continue
         if ch == "-" and i + 1 < len(flat) and flat[i + 1] == ">":
             # lambda arrow (acc, v) -> ... : atomic, never binary minus
@@ -1405,7 +1325,6 @@ def _rewrite_div_mod(s: str) -> str:
             i += 1
             continue
         buf2.append(ch)
-        q.feed(ch)
         i += 1
     tokens.append("".join(buf2))
 
@@ -1507,26 +1426,14 @@ def _expand_like_lists(s: str) -> str:
     anything else (e.g. a function call that happens to follow LIKE in
     a string) is left alone."""
     while True:
-        match_open, str_open, _ = _scan_structure(s)
-        open_close = {o: c for c, o in match_open.items()}
-        # quote parity computed ONCE per scan (O(n)); re-feeding a
-        # fresh _QuoteState over the full prefix per candidate match
-        # was O(n^2) per expansion
-        inq = bytearray(len(s) + 1)
-        qstate = _QuoteState()
-        for qi, qch in enumerate(s):
-            inq[qi] = int(qstate.in_quote)
-            qstate.feed(qch)
-        inq[len(s)] = int(qstate.in_quote)
+        sc = _Scan(s)
         hit = None
         for m in _LIKE_LIST_RE.finditer(s):
-            if inq[m.start()]:
+            if sc.quoted[m.start()]:
                 continue
             open_at = m.end() - 1
-            close_at = open_close.get(open_at)
-            if close_at is None:
-                continue
-            parts = [p.strip() for p in _split_commas(s[open_at + 1 : close_at])]
+            close_at = sc.match[open_at]
+            parts = [p.strip() for p in sc.split(",", open_at)]
             if len(parts) < 2 or any(
                 _string_literal_of(p) is None
                 and not (p.startswith('"') and p.endswith('"'))
@@ -1541,7 +1448,7 @@ def _expand_like_lists(s: str) -> str:
         j = m.start()
         while j > 0 and s[j - 1].isspace():
             j -= 1
-        start = _operand_start(s, j, match_open, str_open)
+        start = _operand_start(sc, j)
         if start == j:
             raise EsqlValidationError(
                 f"{m.group(2).upper()} pattern list has no operand"
@@ -2109,29 +2016,15 @@ def _apply_fork(
     'fork1'..'forkN'; branch schemas are aligned by column name with
     missing columns NULL (allowMissingColumns union), matching ES|QL's
     branch-merge behavior."""
+    sc = _Scan(body)
     branches: list[str] = []
     stray: list[str] = []  # depth-0 text outside the (branch) groups
-    depth, start = 0, None
-    q = _QuoteState()
-    for i, ch in enumerate(body):
-        in_q = q.in_quote
-        q.feed(ch)
-        if in_q:
-            continue
-        if ch == "(":
-            if depth == 0:
-                start = i + 1
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                branches.append(body[start:i])
-            elif depth < 0:
-                raise EsqlValidationError("FORK: unbalanced parentheses")
-        elif depth == 0:
-            stray.append(ch)
-    if depth != 0:
-        raise EsqlValidationError("FORK: unbalanced parentheses")
+    pos = 0
+    for o in sc.top("("):
+        stray.append(body[pos:o])
+        branches.append(body[o + 1 : sc.match[o]])
+        pos = sc.match[o] + 1
+    stray.append(body[pos:])
     stray_text = "".join(stray).strip()
     if stray_text:
         # silently dropping mis-nested text would run a different query

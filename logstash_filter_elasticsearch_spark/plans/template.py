@@ -909,6 +909,7 @@ def _theta_enrich(
     shrunk by the static pushdown.
     """
     from logstash_filter_elasticsearch_spark.operators.enrich import (
+        _get,
         hits_comparator,
     )
 
@@ -956,24 +957,16 @@ def _theta_enrich(
         hits = F.array_sort(hits, hits_comparator(sort))
     grouped = grouped.withColumn("_hits", F.slice(hits, 1, size)).drop("_hits_all")
     for src, dest in {**fields, **docinfo_fields}.items():
-        path = field_ref_to_path(src)
-
         def extractor(p):
-            return lambda h: _walk(h, p)
+            return lambda h: _get(h, p)
 
-        grouped = grouped.withColumn(dest, F.transform(F.col("_hits"), extractor(path)))
+        grouped = grouped.withColumn(dest, F.transform(F.col("_hits"), extractor(src)))
     grouped = grouped.drop("_hits")
 
     out = events.join(grouped, on=event_id, how="left")
     out = out.withColumn("_meta_total_hits", F.coalesce("_total_hits", F.lit(0)))
     out = out.withColumn("matched", F.col("_meta_total_hits") > 0)
     return out.drop("_total_hits")
-
-
-def _walk(col: Column, path: str) -> Column:
-    for p in path.split("."):
-        col = col[p]
-    return col
 
 
 def _node_fields(node) -> list[str]:

@@ -4,6 +4,8 @@ Fixture table from spec/filters/integration/elasticsearch_esql_spec.rb:16-25
 (FIXTURES.md F3): 6 docs, types a,a,b,b,c,t, count 1..5 + NULL.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -227,6 +229,61 @@ def test_enrich_unknown_policy(spark):
     df = spark.createDataFrame([(1,)], "id int")
     with pytest.raises(EsqlValidationError):
         run_esql(spark, "FROM t | ENRICH nope ON id", tables={"t": df})
+
+
+@pytest.mark.parametrize(
+    "text, pipes, commas, by_at",
+    [
+        # an escaped quote does not close the literal
+        (r"x == 'it\'s | a, b BY c', y",
+         [r"x == 'it\'s | a, b BY c', y"], [r"x == 'it\'s | a, b BY c'", "y"], -1),
+        # a ' inside "..." opens nothing
+        ('"don\'t | stop, BY" | z', ['"don\'t | stop, BY"', "z"], ['"don\'t | stop, BY" | z'], -1),
+        # () and [] nest alike
+        ("f(a, [1, (2 | 3)], g(b)) BY k, m",
+         ["f(a, [1, (2 | 3)], g(b)) BY k, m"], ["f(a, [1, (2 | 3)], g(b)) BY k", "m"], 25),
+        # | , BY inside a [...] multivalue literal are not separators
+        ("[a | b, c BY d] BY e", ["[a | b, c BY d] BY e"], ["[a | b, c BY d] BY e"], 16),
+        ("n BY g, h | LIMIT 2", ["n BY g, h", "LIMIT 2"], ["n BY g", "h | LIMIT 2"], 2),
+    ],
+)
+def test_structural_scan(text, pipes, commas, by_at):
+    """Every splitter reads the one structural scan: quotes (with
+    backslash escapes) hide separators, and () / [] nest alike."""
+    from logstash_filter_elasticsearch_spark.plans.esql import (
+        _find_top_keyword,
+        _split_commas,
+        _split_pipes,
+    )
+
+    assert _split_pipes(text) == pipes
+    assert _split_commas(text) == commas
+    assert _find_top_keyword(text, "BY") == by_at
+
+
+@pytest.mark.parametrize(
+    "text, where",
+    [
+        ("FROM t | WHERE (a)) | LIMIT 1", "unbalanced ')' at position 18"),
+        ("f(a", "unclosed '(' at position 1"),
+        ("[a)", "unbalanced ')' at position 2"),
+        ("')' )", "unbalanced ')' at position 4"),
+    ],
+)
+def test_structural_scan_rejects_unbalanced(text, where):
+    """An unbalanced or mismatched bracket outside quotes raises once,
+    naming its position (a stray ')' is never silently clamped)."""
+    from logstash_filter_elasticsearch_spark.plans.esql import _split_pipes
+
+    with pytest.raises(EsqlValidationError, match=re.escape(where)):
+        _split_pipes(text)
+
+
+def test_multivalue_literal_is_one_argument():
+    """Commas inside a [...] literal do not split a call's arguments."""
+    from logstash_filter_elasticsearch_spark.plans.esql import _translate_expr
+
+    assert _translate_expr("MV_FIRST([1, 2])") == "try_element_at(array(1, 2), 1)"
 
 
 def test_quoted_literals_untouched(spark, esql_docs):

@@ -1,9 +1,13 @@
 """Streaming pipeline + config-validation tests."""
 
 import os
+import shutil
+import time
 
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from logstash_filter_elasticsearch_spark.config import ConfigError, QueryConfig, check_tables
 from logstash_filter_elasticsearch_spark.streaming.pipeline import (
@@ -35,6 +39,64 @@ def test_streaming_fanout_matches_batch(spark, seq_data, tmp_path):
         )
     assert total == 2000  # every input row delivered exactly once
     assert quarantined > 0
+
+
+@pytest.fixture(scope="module")
+def ordered_source(seq_data, tmp_path_factory):
+    """The seq_data files copied with strictly increasing mtimes: a file
+    source with maxFilesPerTrigger=1 reads them one micro-batch per
+    file, oldest first. Returns (dir, file names in batch order)."""
+    src = seq_data["seq_dir"]
+    dst = str(tmp_path_factory.mktemp("ordered_src"))
+    names = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    base = time.time() - 3600
+    for i, name in enumerate(names):
+        shutil.copy(os.path.join(src, name), os.path.join(dst, name))
+        os.utime(os.path.join(dst, name), (base + 60 * i, base + 60 * i))
+    return dst, names
+
+
+def _parsed_events(df):
+    from logstash_filter_elasticsearch_spark.operators.parse import parse_doc_ids
+
+    return parse_doc_ids(df).filter(F.col("parse_ok")).withColumn(
+        "ts", F.to_timestamp(F.from_unixtime(F.col("epoch")))
+    )
+
+
+def test_windowed_counts_over_micro_batches(spark, ordered_source):
+    """One micro-batch per file: the streamed window counts equal a
+    batch groupBy of the same windows, exactly. Complete mode re-emits
+    every window on each trigger (it never drops state by watermark),
+    so rows of a later file that land in earlier windows still count."""
+    src, names = ordered_source
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    counts = windowed_source_counts(
+        _parsed_events(stream), ts_col="ts", key_col="route_source"
+    )
+    q = (
+        counts.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("windowed_micro_batches")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    batch_rows = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+    assert batch_rows == [
+        pq.read_metadata(os.path.join(src, n)).num_rows for n in names
+    ]
+
+    got = sorted(tuple(r) for r in spark.table("windowed_micro_batches").collect())
+    want = (
+        _parsed_events(spark.read.parquet(src))
+        .groupBy(F.window("ts", "10 minutes").alias("win"), "route_source")
+        .agg(F.count(F.lit(1)).alias("rows"), F.sum("n_tok").alias("sum_n_tok"))
+        .select("win.start", "win.end", "route_source", "rows", "sum_n_tok")
+    )
+    assert got == sorted(tuple(r) for r in want.collect())
 
 
 def test_windowed_counts_on_static(spark, seq_data):
@@ -87,20 +149,20 @@ def test_check_tables(spark, seq_data):
                      required_cols={"lookup": ["not_a_column"]})
 
 
-def test_stateful_first_seen_dedup(spark, seq_data, tmp_path):
-    """applyInPandasWithState dedup: exactly one output row per join_key
-    across all micro-batches."""
-    from pyspark.sql import functions as F
-
+def test_stateful_first_seen_dedup(spark, ordered_source, tmp_path):
+    """applyInPandasWithState dedup over one micro-batch per file:
+    exactly one output row per join_key, taken from the earliest file
+    that holds the key."""
     from logstash_filter_elasticsearch_spark.operators.parse import parse_doc_ids
     from logstash_filter_elasticsearch_spark.streaming.pipeline import (
         stateful_first_seen,
     )
 
-    schema = spark.read.parquet(seq_data["seq_dir"]).schema
+    src, names = ordered_source
+    schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", 1  # force multiple micro-batches
-    ).parquet(seq_data["seq_dir"])
+    ).parquet(src)
     parsed = parse_doc_ids(stream).filter(F.col("parse_ok")).select(
         "doc_id", "join_key", "n_tok"
     )
@@ -116,17 +178,24 @@ def test_stateful_first_seen_dedup(spark, seq_data, tmp_path):
     )
     q.awaitTermination(180)
 
-    import pyarrow.dataset as pads
+    file_of: dict = {}  # doc_id -> file index
+    first_file: dict = {}  # join_key -> earliest file index holding it
+    for i, name in enumerate(names):
+        rows = (
+            parse_doc_ids(spark.read.parquet(os.path.join(src, name)))
+            .filter(F.col("parse_ok"))
+            .select("doc_id", "join_key")
+            .collect()
+        )
+        for r in rows:
+            file_of[r["doc_id"]] = i
+            first_file.setdefault(r["join_key"], i)
+    assert len(set(first_file.values())) > 1  # some keys first appear later
 
-    got = pads.dataset(out).to_table(columns=["join_key"]).column("join_key").to_pylist()
-    n_keys = (
-        parse_doc_ids(spark.read.parquet(seq_data["seq_dir"]))
-        .filter(F.col("parse_ok"))
-        .select("join_key")
-        .distinct()
-        .count()
-    )
-    assert len(got) == len(set(got)) == n_keys
+    got = pads.dataset(out).to_table(columns=["doc_id", "join_key"]).to_pylist()
+    keys = [r["join_key"] for r in got]
+    assert len(keys) == len(set(keys)) == len(first_file)
+    assert all(file_of[r["doc_id"]] == first_file[r["join_key"]] for r in got)
 
 
 def test_session_windows_on_static(spark, seq_data):

@@ -7,7 +7,8 @@ benchmarking ONLY (never for correctness — the oracle gate runs on the
 driver's own sf dirs):
 
 * Relational tables tile N times with key shifts (new_key = key +
-  tile * (max_key + 1)) so referential joins keep their exact
+  tile * (max_key + 1), max_key read from the source; a foreign key
+  shifts with its parent key) so referential joins keep their exact
   selectivity and per-key group sizes; nation/region stay fixed like
   TPC-H does across scale factors.
 * ``documents`` applies a per-tile VOCABULARY BIJECTION (seeded word ->
@@ -36,34 +37,48 @@ import sys
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 
+# table -> {column: the key whose shift it takes}. A primary key (and
+# events.user_id, whose users table is implicit) shifts by its own
+# max + 1; a foreign key takes its parent key's shift, so every FK join
+# stays inside its tile and no key repeats across tiles.
+SHIFT_KEYS = {
+    "customer": {"c_custkey": "c_custkey"},
+    "supplier": {"s_suppkey": "s_suppkey"},
+    "part": {"p_partkey": "p_partkey"},
+    "orders": {"o_orderkey": "o_orderkey", "o_custkey": "c_custkey"},
+    "lineitem": {
+        "l_orderkey": "o_orderkey",
+        "l_partkey": "p_partkey",
+        "l_suppkey": "s_suppkey",
+    },
+    "events": {"event_id": "event_id", "user_id": "user_id"},
+}
+
+
 def tile_relational(src: str, dst: str, tiles: int) -> None:
-    shifts = {
-        "customer": {"c_custkey": 15_000},
-        "supplier": {"s_suppkey": 1_000},
-        "part": {"p_partkey": 20_000},
-        "orders": {"o_orderkey": 150_000, "o_custkey": 15_000},
-        "lineitem": {
-            "l_orderkey": 150_000,
-            "l_partkey": 20_000,
-            "l_suppkey": 1_000,
-        },
-        "events": {"event_id": 100_000, "user_id": 1_500},
-    }
     for t in ("region", "nation"):
         tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
         pq.write_table(tbl, os.path.join(dst, f"{t}.parquet"))
-    for t, keys in shifts.items():
-        tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
+    tables = {t: pq.read_table(os.path.join(src, f"{t}.parquet")) for t in SHIFT_KEYS}
+    shift = {
+        key: pc.max(tables[t].column(key)).as_py() + 1
+        for t, keys in SHIFT_KEYS.items()
+        for col, key in keys.items()
+        if col == key
+    }
+    for t, keys in SHIFT_KEYS.items():
+        tbl = tables[t]
         parts = []
         for i in range(tiles):
             cols = {}
             for name in tbl.column_names:
                 col = tbl.column(name)
                 if name in keys and i:
-                    col = pa.compute.add(col, i * keys[name])
+                    col = pc.add(col, i * shift[keys[name]])
                 cols[name] = col
             parts.append(pa.table(cols))
         out = pa.concat_tables(parts)

@@ -42,12 +42,13 @@ from logstash_filter_elasticsearch_spark.operators.text import (
     whitespace_token_count,
 )
 from logstash_filter_elasticsearch_spark.plans.esql import run_esql
+from logstash_filter_elasticsearch_spark.sources.tables import read_parquet
 
 STOP_LIST_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # ---------------------------------------------------------------- queries

@@ -20,6 +20,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from logstash_filter_elasticsearch_spark.plans.esql import validate_params
+from logstash_filter_elasticsearch_spark.sources.tables import parquet_schema
 
 DSL_ONLY_PARAMS = ("index", "query_template", "sort", "fields", "docinfo_fields",
                    "result_size", "aggregation_fields", "enable_sort")
@@ -73,7 +74,7 @@ def check_tables(spark: SparkSession, paths: dict[str, str],
     required_cols = required_cols or {}
     for name, path in paths.items():
         try:
-            schema = spark.read.parquet(path).schema
+            schema = parquet_schema(spark, path)
         except Exception as e:  # noqa: BLE001
             raise ConfigError(f"table {name!r} unreadable at {path}: {e}") from e
         missing = set(required_cols.get(name, [])) - {f.name for f in schema.fields}

@@ -350,12 +350,13 @@ def ngram_jaccard_pairs(
     # jobs, losing the overlap the single replicated-shuffle job gets.
     # The replicated shuffle stays the only path.
     blk = F.pmod(F.xxhash64("_id"), F.lit(blocks)).cast("int")
-    bp_ids = F.array(
-        *[
-            F.least(F.col("_blk"), F.lit(j)) * blocks
-            + F.greatest(F.col("_blk"), F.lit(j))
-            for j in range(blocks)
-        ]
+    # one SQL string: the block-pair id array as one JVM call
+    bp_ids = F.expr(
+        "array("
+        + ", ".join(
+            f"least(_blk, {j}) * {blocks} + greatest(_blk, {j})" for j in range(blocks)
+        )
+        + ")"
     )
     rep = (
         docs_arr.withColumn("_blk", blk)
@@ -376,23 +377,26 @@ def ngram_jaccard_pairs(
 
 def minhash_signatures(shingles: DataFrame, num_perm: int = 64) -> DataFrame:
     """MinHash signature per document of a ``(_id, _sh)`` shingle-array
-    frame: num_perm seeded xxhash64 minima.
+    frame: ``_sig``, the array of num_perm seeded xxhash64 minima
+    (element i is min over shingles of xxhash64(shingle, i)).
 
     Shape chosen for scale: explode shingles once, then ONE grouped
-    aggregate with num_perm min(xxhash64(shingle, seed_i)) columns —
-    every hash/min runs inside whole-stage codegen with map-side
-    partial aggregation, and the shuffle carries only (id, num_perm
-    longs). (A transform+array_min formulation keeps everything in one
-    row but runs interpreted — higher-order functions don't codegen —
-    and was ~100x slower on long documents.)
+    aggregate whose single output is ``array(min(xxhash64(_s, 0)), ...,
+    min(xxhash64(_s, num_perm - 1)))`` — every hash/min runs inside
+    whole-stage codegen with map-side partial aggregation, and the
+    shuffle carries only (id, num_perm longs). The aggregate is built
+    from one SQL string in one JVM call; num_perm aggregate Columns
+    packed by a later select(array(...)) made thousands of py4j round
+    trips for the same physical plan (the optimizer folds that select
+    into the aggregate) and the same signatures. (A transform+array_min
+    formulation keeps everything in one row but runs interpreted —
+    higher-order functions don't codegen — and was ~100x slower on long
+    documents.)
     """
+    # not kept: numpy signatures via mapInArrow, minhash_lsh 2.87 s vs 1.65 s (Python stage alone 662 ms wall)
     sh = shingles.select("_id", F.explode("_sh").alias("_s"))
-    mins = [
-        F.min(F.xxhash64("_s", F.lit(i))).alias(f"_m{i}") for i in range(num_perm)
-    ]
-    agg = sh.groupBy("_id").agg(*mins)
-    sig = F.array(*[F.col(f"_m{i}") for i in range(num_perm)])
-    return agg.select("_id", sig.alias("_sig"))
+    mins = ", ".join(f"min(xxhash64(_s, {i}))" for i in range(num_perm))
+    return sh.groupBy("_id").agg(F.expr(f"array({mins})").alias("_sig"))
 
 
 def minhash_lsh_pairs(
@@ -429,6 +433,7 @@ def minhash_lsh_pairs(
     # inlines computed generator expressions; measured ~10x), and both
     # sides of the exact-verify join read them (released by the
     # ContextCleaner with the result)
+    # not kept: skip_tiny=True on this spread, minhash_lsh 2.05 s vs 1.68 s
     docs = (
         with_word_shingles(
             spread(df.select(F.col(id_col).alias("_id"), text_col)),
@@ -440,21 +445,16 @@ def minhash_lsh_pairs(
     )
     sigs = minhash_signatures(docs, num_perm)
 
+    # (band, hash of the band's r signature slots) per band, built from
+    # one SQL string
+    band_structs = ", ".join(
+        f"struct({b} AS band, xxhash64("
+        + ", ".join(f"_sig[{b * r + j}]" for j in range(r))
+        + ") AS bhash)"
+        for b in range(bands)
+    )
     band_rows = sigs.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("_sig")[b * r + j] for j in range(r)]
-                        ).alias("bhash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_band"),
+        "_id", F.explode(F.expr(f"array({band_structs})")).alias("_band")
     ).select("_id", "_band.band", "_band.bhash")
 
     # group-then-pair instead of a self-join: the signature subtree
@@ -468,6 +468,7 @@ def minhash_lsh_pairs(
         # Lifecycle: the returned plan references this cache, and
         # Spark's ContextCleaner unpersists it once the caller drops
         # the result DataFrame — it is not pinned for the session.
+        # kept: without this persist minhash_lsh took 1.76 s vs 1.68 s, 14 jobs instead of 12
         band_rows = band_rows.persist(StorageLevel.MEMORY_AND_DISK)
         band_rows = _drop_heavy_keys(band_rows, ["band", "bhash"], bucket_cap)
     posting = band_rows.groupBy("band", "bhash").agg(
@@ -523,30 +524,31 @@ def simhash(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     words = words_arr.select("_id", F.explode("_wl").alias("_w"))
+    # the bit sums and the fingerprint are each built from one SQL
+    # string: one JVM call, not one per sub-expression
     if hash_mode == "md5":
         words = words.withColumn("_hx", F.md5("_w"))
-        chunk = [
-            F.conv(F.substring("_hx", 1 + 4 * c, 4), 16, 10).cast("int")
-            for c in range(4)
-        ]
-        bit = lambda i: F.shiftright(chunk[i // 16], i % 16).bitwiseAND(F.lit(1))
+        chunk = [f"CAST(conv(substring(_hx, {1 + 4 * c}, 4), 16, 10) AS INT)" for c in range(4)]
+        bit = lambda i: f"(shiftright({chunk[i // 16]}, {i % 16}) & 1)"
     else:
         words = words.withColumn("_h", F.xxhash64("_w", F.lit(42)))
-        bit = lambda i: F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1))
+        bit = lambda i: f"(shiftright(_h, {i}) & 1)"
 
     bit_sums = [
-        F.sum(F.when(bit(i) == 1, 1).otherwise(-1)).alias(f"_b{i}")
-        for i in range(64)
+        F.expr(f"sum(CASE WHEN {bit(i)} = 1 THEN 1 ELSE -1 END) AS _b{i}") for i in range(64)
     ]
     agg = words.groupBy("_id").agg(*bit_sums)
 
-    fp = F.lit(0).cast("long")
-    for i in range(64):
-        bit_val = (1 << i) if i < 63 else -(1 << 63)  # bit 63 = int64 sign bit
-        fp = fp + F.when(F.col(f"_b{i}") > 0, F.lit(bit_val).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return agg.select(F.col("_id").alias(id_col), fp.alias("simhash"))
+    # bit 63 is the int64 sign bit: its literal folds to -2^63
+    bit_val = lambda i: str(1 << i) if i < 63 else "-9223372036854775807 - 1"
+    fp = " + ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [
+            f"CASE WHEN _b{i} > 0 THEN CAST({bit_val(i)} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+            for i in range(64)
+        ]
+    )
+    return agg.select(F.col("_id").alias(id_col), F.expr(fp).alias("simhash"))
 
 
 def simhash_near_pairs(

@@ -35,8 +35,8 @@ Spark-first design — why this shape scales to 100 TB:
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,18 +47,61 @@ from logstash_filter_elasticsearch_spark.operators.layout import spread
 DEFAULT_FAILURE_TAG = "_elasticsearch_lookup_failure"  # elasticsearch.rb:133-134
 
 
-def _get(col: Column, path: str) -> Column:
-    """Walk a dotted path inside a struct column (dsl_executor.rb:110-125).
+def _sql_literal(v) -> str:
+    """Spark SQL text for a Python None, bool, int, float or str, typed as
+    ``F.lit(v)`` types it (an int outside int32 is a BIGINT either way; a
+    float is a DOUBLE)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+    if not isinstance(v, str):
+        raise TypeError(f"no SQL literal for {type(v).__name__} {v!r}")
+    s = v.replace("\\", "\\\\").replace("'", "\\'")
+    return f"'{s}'"
+
+
+def _get_sql(root: str | None, path: str) -> str:
+    """SQL walking a dotted path (dsl_executor.rb:110-125) inside the
+    struct ``root`` (a lambda variable), ``root['a']['b']``, or from a
+    column when ``root`` is None, ``a['b']``.
 
     Missing intermediate -> NULL natively (the Ruby code breaks out of
     the copy; we carry NULL and gate on ``matched``).
     """
-    return reduce(lambda c, p: c[p], field_ref_to_path(path).split("."), col)
+    parts = field_ref_to_path(path).split(".")
+    if root is None:
+        root, parts = parts[0], parts[1:]
+    return _ident(root) + "".join(f"[{_sql_literal(p)}]" for p in parts)
 
 
-def hits_comparator(sort_spec: list[tuple], field_types: dict | None = None):
+def _ident(name: str) -> str:
+    """A column or variable name quoted for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _missing_sql(missing, dt) -> str:
+    """A custom sort ``missing`` value as SQL, cast to the field's type
+    ``dt`` when known."""
+    lit = _sql_literal(missing)
+    return f"CAST({lit} AS {dt.simpleString()})" if dt is not None else lit
+
+
+def extract_hits(path: str) -> Column:
+    """``path`` of every hit struct in ``_hits``, as an array: one
+    ``transform`` built from SQL text in one JVM call (a Python lambda is
+    built through a chain of py4j round trips)."""
+    return F.expr(f"transform(_hits, h -> {_get_sql('h', path)})")
+
+
+def hits_comparator(sort_spec: list[tuple], field_types: dict | None = None) -> str:
     """array_sort comparator over hit structs from an ES-style sort spec
-    (elasticsearch.rb:43-44, docs/index.asciidoc:510-516).
+    (elasticsearch.rb:43-44, docs/index.asciidoc:510-516), as the SQL
+    text of a ``(l, r) -> ...`` lambda, parsed in one JVM call.
 
     Each item is ``(path, direction)`` or ``(path, direction, missing)``
     with ES per-field ``missing`` semantics: ``"_last"`` (the ES
@@ -74,40 +117,31 @@ def hits_comparator(sort_spec: list[tuple], field_types: dict | None = None):
     numerically instead of silently coercing the whole comparison to a
     lexicographic string one.
     """
-
-    def cmp(left: Column, right: Column) -> Column:
-        expr = F.lit(0)
-        # build innermost-first so earlier sort keys take precedence
-        for spec in reversed(sort_spec):
-            path, direction = spec[0], spec[1]
-            missing = spec[2] if len(spec) > 2 else "_last"
-            sign = -1 if direction.lower().startswith("d") else 1
-            lv, rv = _get(left, path), _get(right, path)
-            if missing in ("_first", "_last"):
-                # placement in the RESULT order, independent of the
-                # direction — exactly ES's _first/_last
-                null_l = F.lit(-1 if missing == "_first" else 1)
-                expr = (
-                    F.when(lv.isNull() & rv.isNull(), expr)
-                    .when(lv.isNull(), null_l)
-                    .when(rv.isNull(), -null_l)
-                    .when(lv < rv, F.lit(-sign))
-                    .when(lv > rv, F.lit(sign))
-                    .otherwise(expr)
-                )
-            else:
-                dt = (field_types or {}).get(path)
-                miss = F.lit(missing).cast(dt) if dt is not None else F.lit(missing)
-                lv2 = F.coalesce(lv, miss)
-                rv2 = F.coalesce(rv, miss)
-                expr = (
-                    F.when(lv2 < rv2, F.lit(-sign))
-                    .when(lv2 > rv2, F.lit(sign))
-                    .otherwise(expr)
-                )
-        return expr
-
-    return cmp
+    expr = "0"
+    # build innermost-first so earlier sort keys take precedence
+    for spec in reversed(sort_spec):
+        path, direction = spec[0], spec[1]
+        missing = spec[2] if len(spec) > 2 else "_last"
+        sign = -1 if direction.lower().startswith("d") else 1
+        lv, rv = _get_sql("l", path), _get_sql("r", path)
+        if missing in ("_first", "_last"):
+            # placement in the RESULT order, independent of the
+            # direction — exactly ES's _first/_last
+            null_l = -1 if missing == "_first" else 1
+            expr = (
+                f"CASE WHEN {lv} IS NULL AND {rv} IS NULL THEN {expr} "
+                f"WHEN {lv} IS NULL THEN {null_l} WHEN {rv} IS NULL THEN {-null_l} "
+                f"WHEN {lv} < {rv} THEN {-sign} WHEN {lv} > {rv} THEN {sign} "
+                f"ELSE {expr} END"
+            )
+        else:
+            miss = _missing_sql(missing, (field_types or {}).get(path))
+            lv2, rv2 = f"coalesce({lv}, {miss})", f"coalesce({rv}, {miss})"
+            expr = (
+                f"CASE WHEN {lv2} < {rv2} THEN {-sign} "
+                f"WHEN {lv2} > {rv2} THEN {sign} ELSE {expr} END"
+            )
+    return f"(l, r) -> {expr}"
 
 
 @dataclass
@@ -167,9 +201,9 @@ class Enricher:
         elasticsearch.rb:43-44; docs/index.asciidoc:510-516)."""
         return hits_comparator(self._sort, getattr(self, "_sort_types", None))
 
-    def _minby_key(self):
-        """ASC-ordering struct equivalent to ``hits_comparator``, or
-        None when no exact equivalent exists.
+    def _minby_key(self) -> str | None:
+        """SQL text of an ASC-ordering struct equivalent to
+        ``hits_comparator``, or None when no exact equivalent exists.
 
         Lets ``result_size=1`` use one declarative ``min_by`` (codegen
         HashAggregate with EFFECTIVE partial aggregation: one struct
@@ -203,46 +237,38 @@ class Enricher:
             missing = s[2] if len(s) > 2 else "_last"
             desc = direction.lower().startswith("d")
             dt = self._sort_types.get(path)
-            parts = field_ref_to_path(path).split(".")
-            v = F.col(parts[0])
-            for p in parts[1:]:
-                v = v[p]
+            v = _get_sql(None, path)
             if missing in ("_first", "_last"):
                 channels.append(
-                    F.when(v.isNull(), F.lit(-1 if missing == "_first" else 1))
-                    .otherwise(F.lit(0))
+                    f"CASE WHEN {v} IS NULL THEN {-1 if missing == '_first' else 1} ELSE 0 END"
                 )
             else:
-                v = F.coalesce(v, F.lit(missing).cast(dt) if dt is not None else F.lit(missing))
+                v = f"coalesce({v}, {_missing_sql(missing, dt)})"
             if not desc:
                 channels.append(v)
                 continue
             if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-                channels.append(F.bitwise_not(v))
+                channels.append(f"~({v})")
             elif isinstance(dt, T.BooleanType):
-                channels.append(F.bitwise_not(v.cast("int")))
+                channels.append(f"~(CAST({v} AS INT))")
             elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
                 # NTZ first casts to the instant type; the session zone
                 # is pinned UTC (session.py), so the cast is monotone
                 # AND injective (no DST fold)
-                channels.append(
-                    F.bitwise_not(F.unix_micros(v.cast("timestamp")))
-                )
+                channels.append(f"~(unix_micros(CAST({v} AS TIMESTAMP)))")
             elif isinstance(dt, T.DateType):
-                channels.append(F.bitwise_not(F.unix_date(v)))
+                channels.append(f"~(unix_date({v}))")
             elif isinstance(dt, (T.FloatType, T.DoubleType)):
                 # Spark totals NaN as greatest; the comparator's desc
                 # branch therefore puts NaN FIRST — rank it below all
                 # negated ordinary values
-                channels.append(
-                    F.when(F.isnan(v), F.lit(-1)).otherwise(F.lit(0))
-                )
-                channels.append(-v)
+                channels.append(f"CASE WHEN isnan({v}) THEN -1 ELSE 0 END")
+                channels.append(f"-({v})")
             elif isinstance(dt, T.DecimalType):
-                channels.append(-v)
+                channels.append(f"-({v})")
             else:
                 return None
-        return F.struct(*[c.alias(f"_k{i}") for i, c in enumerate(channels)])
+        return "struct(" + ", ".join(f"{c} AS _k{i}" for i, c in enumerate(channels)) + ")"
 
     def prepare_lookup(self, lookup: DataFrame) -> DataFrame:
         """Pre-aggregate the snapshot to ONE row per join key.
@@ -291,7 +317,8 @@ class Enricher:
             if node is not None:
                 self._sort_types[s[0]] = node
 
-        aggs = [F.count(F.lit(1)).alias("_total_hits")]  # dsl_executor.rb:48
+        # the aggregates are built from SQL text, one JVM call each
+        aggs = [F.expr("count(1) AS _total_hits")]  # dsl_executor.rb:48
         minkey = (
             self._minby_key()
             if self._has_hits and spec.result_size == 1
@@ -299,11 +326,11 @@ class Enricher:
         )
         if self._has_hits:
             top_cols = [c for c in self._hit_paths() if c in present]
-            hit_struct = F.struct(*[F.col(c).alias(c) for c in top_cols])
+            hit_struct = "struct(" + ", ".join(f"{_ident(c)} AS {_ident(c)}" for c in top_cols) + ")"
             if minkey is not None:
-                aggs.append(F.min_by(hit_struct, minkey).alias("_top1"))
+                aggs.append(F.expr(f"min_by({hit_struct}, {minkey}) AS _top1"))
             else:
-                aggs.append(F.collect_list(hit_struct).alias("_hits_all"))
+                aggs.append(F.expr(f"collect_list({hit_struct}) AS _hits_all"))
         bucket_aggs: dict[str, tuple] = {}
         for dest, agg_spec in spec.aggregation_fields.items():
             fn, path = agg_spec[0], agg_spec[1]
@@ -397,7 +424,7 @@ class Enricher:
         else:
             hits = F.col("_hits_all")
             if spec.enable_sort and self._sort:
-                hits = F.array_sort(hits, self._sort_comparator())
+                hits = F.expr(f"array_sort(_hits_all, {self._sort_comparator()})")
             hits = F.slice(hits, 1, spec.result_size)
             grouped = grouped.withColumn("_hits", hits).drop("_hits_all")
 
@@ -408,15 +435,9 @@ class Enricher:
         # carries ready-made dest arrays and the big side reduces to a
         # pure codegen hash-join probe. (Measured: 10.8s -> ~2s for a
         # 2M-row enrich on local[32].)
-        def extractor(path):
-            # single-arg lambda: F.transform passes (elem, idx) to
-            # 2-arg lambdas, which would clobber a default argument
-            return lambda h: _get(h, path)
-
-        for src, dest in {**spec.fields, **spec.docinfo_fields}.items():
-            grouped = grouped.withColumn(
-                dest, F.transform(F.col("_hits"), extractor(src))
-            )
+        grouped = grouped.withColumns(
+            {dest: extract_hits(src) for src, dest in {**spec.fields, **spec.docinfo_fields}.items()}
+        )
         if not spec.keep_hits:
             grouped = grouped.drop("_hits")
         return grouped
@@ -451,12 +472,12 @@ class Enricher:
         # exactly the reference's condition in set form.
         matched = F.coalesce(F.col("_total_hits") > 0, F.lit(False))
 
-        out = joined.withColumn("_meta_total_hits", F.coalesce("_total_hits", F.lit(0)))
+        out = joined.withColumns(
+            {"_meta_total_hits": F.coalesce("_total_hits", F.lit(0)), "matched": matched}
+        )
 
         dest_cols = list(spec.fields.values()) + list(spec.docinfo_fields.values())
         dest_cols.extend(agg_cols)
-
-        out = out.withColumn("matched", matched)
 
         if spec.target:  # dsl_executor.rb:21-25,133-136
             out = out.withColumn(

@@ -38,6 +38,7 @@ from logstash_filter_elasticsearch_spark.checkpoint import Manifest, publish_ato
 from logstash_filter_elasticsearch_spark.fsio import fs_for
 from logstash_filter_elasticsearch_spark.operators.enrich import EnrichSpec, Enricher
 from logstash_filter_elasticsearch_spark.operators.parse import parse_doc_ids
+from logstash_filter_elasticsearch_spark.sources.tables import read_parquet
 
 QUARANTINE_ROUTE = "_quarantine"
 
@@ -177,8 +178,8 @@ class PipelineConfig:
 
 def build_enriched(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     """The lazy logical plan: parse + enrich + route column."""
-    seqs = spark.read.parquet(cfg.sequences_path)
-    lookup = spark.read.parquet(cfg.lookup_path)
+    seqs = read_parquet(spark, cfg.sequences_path)
+    lookup = read_parquet(spark, cfg.lookup_path)
 
     parsed = parse_doc_ids(seqs)
     spec = EnrichSpec(
@@ -290,7 +291,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
         }
         phase_t["metrics_agg_s"] = round(_time.monotonic() - t0, 3)
         t0 = _time.monotonic()
-        input_files = spark.read.parquet(cfg.sequences_path).inputFiles()
+        input_files = read_parquet(spark, cfg.sequences_path).inputFiles()
         for d in staged_dirs:
             route = urllib.parse.unquote(d.split("=", 1)[1])
             if snapshot_mode:

@@ -1131,11 +1131,17 @@ def _split_pipes(query: str) -> list[str]:
 
 def _split_commas(s: str) -> list[str]:
     """Split on top-level commas (not inside brackets — ES|QL
-    multivalue literals ``[1, 2, 3]`` included — or quotes); a trailing
-    empty piece (``a,``) is dropped."""
+    multivalue literals ``[1, 2, 3]`` included — or quotes). Blank text
+    has no pieces (the arguments of ``NOW()``); an empty piece anywhere
+    else (``a,``, ``a,,b``, ``,a``) raises with its position."""
     parts = _Scan(s).split(",")
-    if not parts[-1]:
-        parts.pop()
+    if len(parts) == 1 and not parts[0].strip():
+        return []
+    at = 0
+    for p in parts:
+        if not p.strip():
+            raise EsqlValidationError(f"empty item at position {at} in {s!r}")
+        at += len(p) + 1
     return [p.strip() for p in parts]
 
 
@@ -2440,9 +2446,7 @@ def rows_to_target_json(
         )
         packed = df.select(keyed.alias("_kr"))
         return packed.agg(
-            F.transform(
-                F.array_sort(F.collect_list("_kr")), lambda s: s["_row"]
-            ).alias(target),
+            F.expr("transform(array_sort(collect_list(_kr)), s -> s['_row'])").alias(target),
             F.count(F.lit(1)).alias("_meta_total_values"),
         )
     packed = df.select(row_json.alias("_row"))

@@ -909,7 +909,7 @@ def _theta_enrich(
     shrunk by the static pushdown.
     """
     from logstash_filter_elasticsearch_spark.operators.enrich import (
-        _get,
+        extract_hits,
         hits_comparator,
     )
 
@@ -954,13 +954,10 @@ def _theta_enrich(
     )
     hits = F.col("_hits_all")
     if sort:
-        hits = F.array_sort(hits, hits_comparator(sort))
+        hits = F.expr(f"array_sort(_hits_all, {hits_comparator(sort)})")
     grouped = grouped.withColumn("_hits", F.slice(hits, 1, size)).drop("_hits_all")
     for src, dest in {**fields, **docinfo_fields}.items():
-        def extractor(p):
-            return lambda h: _get(h, p)
-
-        grouped = grouped.withColumn(dest, F.transform(F.col("_hits"), extractor(src)))
+        grouped = grouped.withColumn(dest, extract_hits(src))
     grouped = grouped.drop("_hits")
 
     out = events.join(grouped, on=event_id, how="left")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from logstash_filter_elasticsearch_spark.operators.enrich import EnrichSpec, Enricher
 from logstash_filter_elasticsearch_spark.operators.parse import parse_doc_ids
 from logstash_filter_elasticsearch_spark.pipeline import QUARANTINE_ROUTE
+from logstash_filter_elasticsearch_spark.sources.tables import parquet_schema, read_parquet
 
 
 def build_streaming_enriched(
@@ -33,9 +34,9 @@ def build_streaming_enriched(
 ) -> DataFrame:
     """readStream -> parse -> stream-static broadcast enrich -> route."""
     if schema is None:
-        schema = spark.read.parquet(sequences_path).schema
+        schema = parquet_schema(spark, sequences_path)
     stream = spark.readStream.schema(schema).parquet(sequences_path)
-    lookup = spark.read.parquet(lookup_path)  # static snapshot side
+    lookup = read_parquet(spark, lookup_path)  # static snapshot side
 
     parsed = parse_doc_ids(stream)
     spec = EnrichSpec(

@@ -286,6 +286,30 @@ def test_multivalue_literal_is_one_argument():
     assert _translate_expr("MV_FIRST([1, 2])") == "try_element_at(array(1, 2), 1)"
 
 
+@pytest.mark.parametrize(
+    "query, where",
+    [
+        ("FROM my_index | KEEP type,", "position 5 in 'type,'"),
+        ("FROM my_index | EVAL m = CONCAT(type, message,)", "position 14 in 'type, message,'"),
+        ("FROM my_index | KEEP type,,message", "position 5 in 'type,,message'"),
+    ],
+)
+def test_empty_comma_piece_rejected(spark, esql_docs, query, where):
+    """A trailing or doubled comma is a malformed list and raises with
+    its position, instead of being dropped."""
+    with pytest.raises(EsqlValidationError, match=re.escape(where)):
+        run_esql(spark, query, tables=esql_docs)
+
+
+def test_zero_argument_call_compiles(spark, esql_docs):
+    """An empty argument list is not an empty comma piece."""
+    from logstash_filter_elasticsearch_spark.plans.esql import _split_commas
+
+    assert _split_commas("") == [] and _split_commas(" ") == []
+    out = run_esql(spark, "FROM my_index | EVAL t = NOW() | KEEP t | LIMIT 1", tables=esql_docs)
+    assert out.collect()[0]["t"] is not None
+
+
 def test_quoted_literals_untouched(spark, esql_docs):
     """`==` and `?name` inside string literals are literal text, not
     operators/placeholders (quote-aware translation + substitution)."""

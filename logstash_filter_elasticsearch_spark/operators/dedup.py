@@ -318,8 +318,10 @@ def ngram_jaccard_pairs(
     # regex projection re-evaluates the whole shingle extraction per
     # OUTPUT row (measured 10.6s vs 0.35s behind a materialization
     # barrier at sf1.0). The cache also serves both downstream
-    # consumers (heavy-key count + per-doc array build). Released by
-    # Spark's ContextCleaner when the caller drops the result.
+    # consumers (heavy-key count + per-doc array build). Lifecycle:
+    # Spark's CacheManager keeps the cached plan until unpersist() or
+    # clearCache(); dropping the result does not release it, so the
+    # caller does (perfbench and tools/ clearCache() after each query).
     from pyspark import StorageLevel
 
     arr = base.select("_id", "_sh").persist(StorageLevel.MEMORY_AND_DISK)
@@ -431,8 +433,9 @@ def minhash_lsh_pairs(
     # explodes them (exploding straight off the regex projection
     # re-evaluates the shingle extraction per OUTPUT row — Generate
     # inlines computed generator expressions; measured ~10x), and both
-    # sides of the exact-verify join read them (released by the
-    # ContextCleaner with the result)
+    # sides of the exact-verify join read them. The CacheManager keeps
+    # this cache until the caller's unpersist()/clearCache(), as for
+    # band_rows below.
     # not kept: skip_tiny=True on this spread, minhash_lsh 2.05 s vs 1.68 s
     docs = (
         with_word_shingles(
@@ -465,9 +468,11 @@ def minhash_lsh_pairs(
         # join); persist the compact (id, band, bhash) rows so the
         # signature aggregate isn't recomputed — production LSH builds
         # materialize the signature table as an index artifact anyway.
-        # Lifecycle: the returned plan references this cache, and
-        # Spark's ContextCleaner unpersists it once the caller drops
-        # the result DataFrame — it is not pinned for the session.
+        # Lifecycle: the returned plan reads this cache, and Spark's
+        # CacheManager keeps it until unpersist() or clearCache(): it
+        # is not released when the caller drops the result, so the
+        # caller releases it (perfbench and tools/ clearCache() after
+        # each query).
         # kept: without this persist minhash_lsh took 1.76 s vs 1.68 s, 14 jobs instead of 12
         band_rows = band_rows.persist(StorageLevel.MEMORY_AND_DISK)
         band_rows = _drop_heavy_keys(band_rows, ["band", "bhash"], bucket_cap)
@@ -670,10 +675,10 @@ def connected_components(
         raise
     finally:
         edges.unpersist()
-    # the returned plan still reads the final labels cache; it is
-    # released by Spark's ContextCleaner once the caller drops the
-    # DataFrame (or explicitly via .unpersist()), so nothing is pinned
-    # for the session lifetime
+    # the returned plan still reads the final labels cache. Spark's
+    # CacheManager keeps it until unpersist() or clearCache(), not until
+    # the caller drops the DataFrame, so the caller releases it (for
+    # example the clearCache() after each query in perfbench and tools/)
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 

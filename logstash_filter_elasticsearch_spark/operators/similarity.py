@@ -546,8 +546,8 @@ def lsh_near_dup_pairs(
     ]
     srows = _bucket_rows(df, id_col, vec_col, "id", planes)
     # both join sides read srows: persist so the Arrow-batched
-    # signature projection runs once, not once per side (released by
-    # the ContextCleaner when the caller drops the result)
+    # signature projection runs once, not once per side (kept by the
+    # CacheManager until the caller's unpersist()/clearCache())
     from pyspark import StorageLevel
 
     srows = srows.persist(StorageLevel.MEMORY_AND_DISK)

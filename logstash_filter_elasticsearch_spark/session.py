@@ -4,7 +4,9 @@ Defaults chosen for the 100 TB design point and scaled down by core
 count for local testing: AQE on (runtime broadcast conversion + skew
 join splitting), Arrow for any pandas-UDF stage, UTC session timezone
 so timestamp semantics are stable across engines (the DuckDB oracle
-also runs in UTC).
+also runs in UTC). The generated-code cache is sized to hold every
+class the engine's queries compile, so a query shape is compiled once
+per JVM rather than once per execution (see the comment at the conf).
 """
 
 from __future__ import annotations
@@ -58,6 +60,20 @@ def get_spark(
         # lookup snapshots are broadcast; be generous (driver has RAM)
         .config("spark.sql.autoBroadcastJoinThreshold", str(256 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        # Spark's whole-stage/expression codegen cache is an LRU of 100
+        # classes by default, below this engine's working set: one
+        # query_mix pass (perfbench's 8 queries) compiles 146-153
+        # distinct classes, all 77 queries() 633 (sf0.01 and sf0.1
+        # alike), one run_pipeline 32. At 100 every warm pass evicted and
+        # recompiled them (146 Janino compiles per query_mix pass, 700
+        # per pass over the 77); at 2048 (~3x the 633) both drop to 0
+        # from the second pass on, and a pass over the 77 at sf0.01 takes
+        # 21-23 s instead of 28-30 s (local[4]). Cost: +5 MB of Metaspace
+        # (182.6 vs 177.5 MB after three passes over the 77 at sf0.1).
+        # Static conf: it only takes effect when set before the first
+        # SparkContext in the JVM. tools/profile_query.py prints the
+        # working set; tests/test_fixed_cost.py fails on a warm recompile.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         # snappy: re-measured on the 8M-row fan-out write under honest
         # core pinning (taskset + ActiveProcessorCount): snappy beats
         # zstd at every level (L2 47.4s vs 55.0s, L8 16.4s vs 18.3s

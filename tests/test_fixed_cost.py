@@ -3,7 +3,8 @@
 Building a query's DataFrame must start no Spark job once its tables
 have been read in the session (their schemas are inferred once per
 session and file listing, ``sources.tables``), and the schema memo must
-never serve a stale or foreign schema.
+never serve a stale or foreign schema. A query shape's generated code is
+compiled once per JVM: a warm pass recompiles nothing.
 """
 
 import os
@@ -15,12 +16,16 @@ import pytest
 import __spark_entry__ as entry
 from logstash_filter_elasticsearch_spark.sources.tables import parquet_schema, read_parquet
 from test_oracle import SF_DIR
+from tools.profile_query import compiles
+
 TABLES = ["events", "customer", "orders", "documents", "embeddings"]
 # ann_ivf is left out: it collects its query side while building, by design
 NO_JOB_QUERIES = [
     "enrich_left_join", "fields_multi_hit", "esql_stats_by", "esql_enrich",
     "query_template_render", "ngram_jaccard", "minhash_lsh",
 ]
+# perfbench's query_mix entries
+QUERY_MIX = NO_JOB_QUERIES + ["ann_ivf"]
 
 
 def jobs_started(spark, fn):
@@ -55,6 +60,36 @@ def test_build_enriched_starts_no_job(spark, seq_data, tmp_path):
     read_parquet(spark, cfg.lookup_path)
     _, jobs = jobs_started(spark, lambda: build_enriched(spark, cfg))
     assert jobs == 0
+
+
+def test_codegen_cache_holds_the_working_set(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2048"
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason=f"{SF_DIR} not present")
+def test_warm_pass_compiles_nothing(spark):
+    """A second pass over query_mix compiles no generated class: the
+    codegen cache holds the working set and the generated code is
+    byte-identical between runs."""
+
+    def one_pass():
+        compiled = {}
+        for name in QUERY_MIX:
+            before = compiles(spark)
+            df = entry.queries()[name](spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+            compiled[name] = compiles(spark) - before
+        spark.catalog.clearCache()
+        return compiled
+
+    # the counter sees compiles: a literal is inlined into generated code,
+    # so a fresh one makes a new class
+    before = compiles(spark)
+    spark.range(2).selectExpr(f"id * {int.from_bytes(os.urandom(4), 'big')}").collect()
+    assert compiles(spark) > before
+    one_pass()
+    recompiled = {n: c for n, c in one_pass().items() if c}
+    assert not recompiled, f"warm pass recompiled generated classes: {recompiled}"
 
 
 def test_schema_memo_follows_the_file_listing(spark, tmp_path):
